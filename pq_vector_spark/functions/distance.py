@@ -22,12 +22,15 @@ Reference parity notes:
 
 from __future__ import annotations
 
+import math
 from typing import Sequence, Union
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
+
+from pq_vector_spark.functions.sqltext import dlit, ident
 
 VectorLike = Union[str, Column, Sequence[float]]
 
@@ -208,10 +211,11 @@ MULTI_UNROLL_BUDGET = 128
 
 def multi_distances(vec: VectorLike, qmat, metric: str = "l2") -> Column:
     """array<double> of per-query scores for a literal (n_q × d) query
-    matrix — native unrolled expressions when the total term count fits the
-    codegen budget, the Arrow matrix kernel otherwise. Element i is
-    bit-identical to the scalar ``array_distance``/``dot_product``/
-    ``cosine_similarity`` against query row i."""
+    matrix — the scalar native expressions (unrolled for a column name)
+    when the total term count fits the codegen budget, the Arrow matrix
+    kernel otherwise. Element i is bit-identical to the scalar
+    ``array_distance``/``dot_product``/``cosine_similarity`` against query
+    row i."""
     rows = [list(q) for q in qmat]
     if not rows:
         raise ValueError("qmat must contain at least one query vector")
@@ -225,8 +229,7 @@ def multi_distances(vec: VectorLike, qmat, metric: str = "l2") -> Column:
     if dim <= UNROLL_LIMIT and len(rows) * dim <= MULTI_UNROLL_BUDGET:
         return F.array(*[scalar[metric](vec, r) for r in rows])
     mode = {"l2": "sq_l2", "sq_l2": "sq_l2", "dot": "dot", "cosine": "cosine"}[metric]
-    raw = F.col(vec) if isinstance(vec, str) else vec
-    scores = _arrow_multi_kernel(rows, mode)(raw)
+    scores = _arrow_multi_kernel(rows, mode)(_raw(vec))
     # Arrow's list conversion nulls NaN ELEMENTS (pa.Array.from_pandas
     # nan_as_null applies inside lists too). The kernel never emits a null
     # element on purpose — bad rows become a null ARRAY — so any null
@@ -242,78 +245,26 @@ def _is_literal_vec(v: VectorLike) -> bool:
     return not isinstance(v, (str, Column)) and hasattr(v, "__len__")
 
 
-def _unrolled_sum(terms) -> Column:
-    """Left-deep + chain — the SAME addition order as the sequential fold,
-    so results are bit-identical to the HOF form and the DuckDB oracle."""
-    acc = terms[0]
-    for t in terms[1:]:
-        acc = acc + t
-    return acc
+def _raw(v) -> Column:
+    return F.col(v) if isinstance(v, str) else v
 
 
-def _sql_ref(v) -> "str | None":
-    """SQL text for the vector column, or None when it can't be rendered.
-
-    r16 (guide §4's boundary lesson at the DRIVER): building the unrolled
-    chain out of ~dim × 7 Column operations costs one py4j round trip PER
-    operation — ≈1 s of pure driver latency per 128-dim query plan, every
-    time the query is planned. Rendering the whole chain as ONE SQL string
-    and parsing it JVM-side (``F.expr``) builds the IDENTICAL expression
-    tree (same GetArrayItem/Cast/Literal nodes, same left-deep + chain, so
-    bit-identical results) in a single round trip. A name is quoted
-    directly; a Column renders via its expression's canonical SQL (one
-    py4j call — F.col(...) inputs round-trip exactly); anything that
-    fails to render falls back to the per-term Column path."""
-    if isinstance(v, str):
-        return "`" + v.replace("`", "``") + "`"
-    if isinstance(v, Column):
-        try:
-            return v._jc.expr().sql()
-        except Exception:
-            return None
-    return None
-
-
-def _dlit(x: float) -> str:
-    """Exact SQL double literal: repr() round-trips IEEE doubles; the D
-    suffix keeps Spark's parser on DOUBLE (bare decimals parse DECIMAL)."""
-    return repr(float(x)) + "D"
-
-
-def _unrolled_expr(kind: str, raw, q) -> "Column | None":
-    """One-shot parsed form of the unrolled literal-query chain; None when
-    the inputs can't be rendered as SQL (caller falls back to Column ops).
-    Term shapes mirror the Column builders below token-for-token."""
-    import math as _math
-
-    base = _sql_ref(raw)
-    if base is None:
-        return None
-    try:
-        vals = [float(x) for x in q]
-    except (TypeError, ValueError):
-        return None
-    if not all(_math.isfinite(x) for x in vals):
-        return None
-    elem = [f"CAST({base}[{i}] AS DOUBLE)" for i in range(len(vals))]
+def _unrolled_expr(kind: str, name: str, q) -> Column:
+    """The unrolled literal-query chain over the column ``name``, parsed in
+    one call (see functions/sqltext.py). ``+`` is left-associative, so the
+    chain sums in the fold's order and results are bit-identical to it; the
+    size guard keeps the dim-mismatch ⇒ NULL semantics of ``zip_with``.
+    Each extracted ELEMENT is cast, never the whole array — an array cast
+    inside the chain would be re-evaluated once per term."""
+    base = ident(name, kind)
+    elem = [f"CAST({base}[{i}] AS DOUBLE)" for i in range(len(q))]
     if kind == "sq_l2":
-        terms = [
-            f"({e} - {_dlit(x)}) * ({e} - {_dlit(x)})"
-            for e, x in zip(elem, vals)
-        ]
+        terms = [f"({e} - {dlit(x)}) * ({e} - {dlit(x)})" for e, x in zip(elem, q)]
     elif kind == "dot":
-        terms = [f"({e} * {_dlit(x)})" for e, x in zip(elem, vals)]
-    elif kind == "norm_sq":
-        # q is ignored beyond its length: Σ aᵢ·aᵢ over dim terms
+        terms = [f"({e} * {dlit(x)})" for e, x in zip(elem, q)]
+    else:  # "norm_sq": q is ignored beyond its length
         terms = [f"({e} * {e})" for e in elem]
-    else:  # pragma: no cover - internal misuse
-        return None
-    chain = " + ".join(terms)  # + is left-associative: same fold order
-    sql = f"CASE WHEN size({base}) = {len(vals)} THEN {chain} END"
-    try:
-        return F.expr(sql)
-    except Exception:
-        return None
+    return F.expr(f"CASE WHEN size({base}) = {len(q)} THEN {' + '.join(terms)} END")
 
 
 def squared_l2(a: VectorLike, b: VectorLike, *, dim_hint: int | None = None) -> Column:
@@ -328,40 +279,24 @@ def squared_l2(a: VectorLike, b: VectorLike, *, dim_hint: int | None = None) -> 
     fold is sequential left-to-right with a 0.0 initial accumulator, which
     is bit-equivalent to DuckDB's ``list_reduce`` fold (0.0 + x == x).
 
-    Fast path: a literal query vector unrolls into a flat
-    ``(a[0]−q₀)² + (a[1]−q₁)² + …`` expression — higher-order functions are
-    interpreted row-at-a-time in Spark, but the unrolled chain runs inside
-    whole-stage codegen (~10× on wide vectors). Addition order is identical,
-    so both paths produce bit-identical doubles. A size guard keeps the
-    dim-mismatch ⇒ NULL semantics of ``zip_with``.
+    Fast path: a column NAME against a literal query vector unrolls into a
+    flat ``(a[0]−q₀)² + (a[1]−q₁)² + …`` expression — higher-order functions
+    are interpreted row-at-a-time in Spark, but the unrolled chain runs
+    inside whole-stage codegen (~10× on wide vectors). Addition order is
+    identical, so both paths produce bit-identical doubles.
     """
-    if _is_literal_vec(b) and not _is_literal_vec(a) and 0 < len(b) <= UNROLL_LIMIT:
-        # cast each extracted ELEMENT, never the whole array — an array cast
-        # inside the unrolled chain would be re-evaluated (and re-allocated)
-        # once per term
-        fast = _unrolled_expr("sq_l2", a, b)
-        if fast is not None:
-            return fast
-        raw = F.col(a) if isinstance(a, str) else a
-        q = [float(x) for x in b]
-        terms = [
-            (raw.getItem(i).cast("double") - F.lit(qi))
-            * (raw.getItem(i).cast("double") - F.lit(qi))
-            for i, qi in enumerate(q)
-        ]
-        return F.when(F.size(raw) == len(q), _unrolled_sum(terms)).otherwise(F.lit(None))
-    if _is_literal_vec(b) and not _is_literal_vec(a) and len(b) > UNROLL_LIMIT:
-        raw = F.col(a) if isinstance(a, str) else a
-        return _arrow_fold_kernel(b, "sq_l2")(raw)
+    if _is_literal_vec(b) and not _is_literal_vec(a):
+        if len(b) > UNROLL_LIMIT:
+            return _arrow_fold_kernel(b, "sq_l2")(_raw(a))
+        if isinstance(a, str) and len(b) > 0:
+            return _unrolled_expr("sq_l2", a, b)
     if (
         dim_hint is not None
         and dim_hint > UNROLL_LIMIT
         and not _is_literal_vec(a)
         and not _is_literal_vec(b)
     ):
-        ra = F.col(a) if isinstance(a, str) else a
-        rb = F.col(b) if isinstance(b, str) else b
-        return _arrow_fold_kernel2("sq_l2")(ra, rb)
+        return _arrow_fold_kernel2("sq_l2")(_raw(a), _raw(b))
     ca, cb = _as_vector_col(a), _as_vector_col(b)
     diffs = F.zip_with(ca, cb, lambda x, y: (x - y) * (x - y))
     return F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
@@ -380,64 +315,39 @@ def array_distance(a: VectorLike, b: VectorLike, *, dim_hint: int | None = None)
 def dot_product(a: VectorLike, b: VectorLike, *, dim_hint: int | None = None) -> Column:
     """Σ aᵢ·bᵢ as a native expression (basis for cosine). Same literal-query
     unrolled fast path (and bit-parity guarantee) as ``squared_l2``."""
-    if _is_literal_vec(b) and not _is_literal_vec(a) and 0 < len(b) <= UNROLL_LIMIT:
-        fast = _unrolled_expr("dot", a, b)
-        if fast is not None:
-            return fast
-        raw = F.col(a) if isinstance(a, str) else a
-        q = [float(x) for x in b]
-        terms = [raw.getItem(i).cast("double") * F.lit(qi) for i, qi in enumerate(q)]
-        return F.when(F.size(raw) == len(q), _unrolled_sum(terms)).otherwise(F.lit(None))
-    if _is_literal_vec(b) and not _is_literal_vec(a) and len(b) > UNROLL_LIMIT:
-        raw = F.col(a) if isinstance(a, str) else a
-        return _arrow_fold_kernel(b, "dot")(raw)
+    if _is_literal_vec(b) and not _is_literal_vec(a):
+        if len(b) > UNROLL_LIMIT:
+            return _arrow_fold_kernel(b, "dot")(_raw(a))
+        if isinstance(a, str) and len(b) > 0:
+            return _unrolled_expr("dot", a, b)
     if (
         dim_hint is not None
         and dim_hint > UNROLL_LIMIT
         and not _is_literal_vec(a)
         and not _is_literal_vec(b)
     ):
-        ra = F.col(a) if isinstance(a, str) else a
-        rb = F.col(b) if isinstance(b, str) else b
-        return _arrow_fold_kernel2("dot")(ra, rb)
+        return _arrow_fold_kernel2("dot")(_raw(a), _raw(b))
     ca, cb = _as_vector_col(a), _as_vector_col(b)
     prods = F.zip_with(ca, cb, lambda x, y: x * y)
     return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
 
 
 def l2_norm(a: VectorLike, dim: int | None = None) -> Column:
-    """‖a‖. With a known ``dim`` (≤ UNROLL_LIMIT) the square-sum unrolls into
-    codegen like the other kernels; otherwise an interpreted fold."""
+    """‖a‖. For a column name with a known ``dim`` (≤ UNROLL_LIMIT) the
+    square-sum unrolls into codegen like the other kernels; otherwise an
+    interpreted fold."""
     if _is_literal_vec(a):
-        try:
-            # r16: fold the literal norm in Python instead of shipping ~dim
-            # F.lit calls for Catalyst to constant-fold to the same double —
-            # identical left-to-right IEEE-double fold + correctly-rounded
-            # sqrt (math.sqrt ≡ Math.sqrt), so the Literal is bit-equal.
-            import math as _math
-
-            acc = 0.0
-            for x in a:
-                xf = float(x)
-                acc = acc + xf * xf
-            return F.lit(float("nan") if _math.isnan(acc) else _math.sqrt(acc))
-        except (TypeError, ValueError):
-            pass
-        ca = _as_vector_col(a)
-        dim = None  # literal folds at plan time anyway
-    else:
-        raw = F.col(a) if isinstance(a, str) else a
-        ca = raw.cast("array<double>")
-        if dim is not None and 0 < dim <= UNROLL_LIMIT:
-            fast = _unrolled_expr("norm_sq", a, [0.0] * dim)
-            if fast is not None:
-                return F.sqrt(fast)
-            terms = [
-                raw.getItem(i).cast("double") * raw.getItem(i).cast("double")
-                for i in range(dim)
-            ]
-            sq = F.when(F.size(raw) == dim, _unrolled_sum(terms)).otherwise(F.lit(None))
-            return F.sqrt(sq)
+        # fold the literal norm in Python: the same left-to-right IEEE-double
+        # fold Catalyst would constant-fold, plus a correctly-rounded sqrt
+        # (math.sqrt ≡ Math.sqrt), so the Literal is bit-equal
+        acc = 0.0
+        for x in a:
+            xf = float(x)
+            acc = acc + xf * xf
+        return F.lit(float("nan") if math.isnan(acc) else math.sqrt(acc))
+    if isinstance(a, str) and dim is not None and 0 < dim <= UNROLL_LIMIT:
+        return F.sqrt(_unrolled_expr("norm_sq", a, [0.0] * dim))
+    ca = _raw(a).cast("array<double>")
     sq = F.aggregate(F.transform(ca, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x)
     return F.sqrt(sq)
 
@@ -450,17 +360,14 @@ def cosine_similarity(a: VectorLike, b: VectorLike, *, dim_hint: int | None = No
     (dim > UNROLL_LIMIT) run the fused Arrow kernel — one Python eval, not
     three."""
     if _is_literal_vec(b) and not _is_literal_vec(a) and len(b) > UNROLL_LIMIT:
-        raw = F.col(a) if isinstance(a, str) else a
-        return _arrow_fold_kernel(b, "cosine")(raw)
+        return _arrow_fold_kernel(b, "cosine")(_raw(a))
     if (
         dim_hint is not None
         and dim_hint > UNROLL_LIMIT
         and not _is_literal_vec(a)
         and not _is_literal_vec(b)
     ):
-        ra = F.col(a) if isinstance(a, str) else a
-        rb = F.col(b) if isinstance(b, str) else b
-        return _arrow_fold_kernel2("cosine")(ra, rb)
+        return _arrow_fold_kernel2("cosine")(_raw(a), _raw(b))
     dim = len(b) if _is_literal_vec(b) and not _is_literal_vec(a) else None
     denom = l2_norm(a, dim=dim) * l2_norm(b)
     # zero-norm input ⇒ 0/0: ANSI mode would raise DIVIDE_BY_ZERO, but a

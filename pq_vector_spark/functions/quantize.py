@@ -265,7 +265,7 @@ def binary_topk(
         .limit(int(k) * int(oversample))
     )
     out = shortlist.withColumn(
-        # string name, not F.col(...): lets the one-shot SQL render fire (r16)
+        # string name, not F.col(...): only a name unrolls into codegen
         DISTANCE_COL, array_distance(col, [float(x) for x in query])
     )
     order2 = [F.col(DISTANCE_COL).asc()]

@@ -370,7 +370,7 @@ def indexed_topk(
         from pq_vector_spark.functions.distance import cosine_similarity
 
         out = cands.withColumn(
-            # string name, not F.col(...): lets the one-shot SQL render fire (r16)
+            # string name, not F.col(...): only a name unrolls into codegen
             DISTANCE_COL, cosine_similarity(idx.meta["column"], [float(x) for x in q])
         )
         order = [F.col(DISTANCE_COL).desc()]

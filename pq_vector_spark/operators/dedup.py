@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from pq_vector_spark.functions.distance import cosine_similarity
+from pq_vector_spark.functions.sqltext import ident, tokens_sql
 from pq_vector_spark.functions.text import fingerprint, normalize_text, tokens
 
 # MinHash parameters: h_i(x) = (a_i·x + b_i) mod P over x = token_hash mod M.
@@ -48,56 +49,25 @@ def _minhash_coeffs(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
     return coeffs
 
 
-# ---------------------------------------------------------------------------
-# One-shot parsed SQL forms of the hot featurization expressions (r16).
-#
-# Building these trees one Column operation at a time costs one py4j round
-# trip per op — a 32-hash minhash_signature alone is ~500 round trips
-# (~0.3 s of pure driver latency), paid EVERY time a plan is constructed
-# (dedup_minhash, incremental near-dedup, index build/append, streaming
-# micro-batches). Rendering the identical expression as ONE SQL string and
-# parsing it JVM-side (`F.expr`) — the same treatment functions/distance.py
-# gives the unrolled distance chains — collapses that to a single round
-# trip. The SQL mirrors the Column builders token-for-token (same function
-# calls, same literal types, same left-to-right argument order), so the
-# analyzed tree and every computed value are identical; equality is pinned
-# by tests/test_dedup.py::test_sql_rendered_featurization_identical and by
-# every oracle row of the minhash family. Lambda-variable names carry a
-# `__pqlv_` prefix no real column can collide with (lambda scope would win
-# anyway, matching the Column path's fresh internal names — the prefix just
-# removes the question). The SQL path fires only for plain string column
-# names; Column inputs (and any parse failure) fall back to the Column
-# builders below.
-# ---------------------------------------------------------------------------
-
-
-def _sql_name(col) -> "str | None":
-    """Backquoted SQL identifier for a plain column NAME, else None."""
-    if isinstance(col, str):
-        return "`" + col.replace("`", "``") + "`"
-    return None
-
-
-def _tokens_sql(ref: str) -> str:
-    # mirrors functions/text.py:tokens — split(lower(trim(c)), '\s+')
-    return f"split(lower(trim({ref})), '\\\\s+')"
+# The featurizers below take column NAMES and are rendered as one SQL
+# string each (see functions/sqltext.py). Lambda-variable names carry a
+# `__pqlv_` prefix so they cannot shadow a real column.
 
 
 def _token_hash_sql(x: str) -> str:
-    # mirrors functions/text.py:token_hash
+    # SQL form of functions/text.py:token_hash
     return f"CAST(conv(substring(md5({x}), 1, 15), 16, 10) AS BIGINT)"
 
 
 def _shingles_sql(ref: str, n: int) -> str:
-    # mirrors shingles() below, token for token
     return (
-        f"transform(array({_tokens_sql(ref)}), __pqlv_t -> array_distinct("
+        f"transform(array({tokens_sql(ref)}), __pqlv_t -> array_distinct("
         f"transform(sequence(1, greatest(size(__pqlv_t) - {n - 1}, 1)), "
         f"__pqlv_i -> concat_ws(' ', slice(__pqlv_t, __pqlv_i, {n})))))[0]"
     )
 
 
-def shingles(col, n: int = 3) -> Column:
+def shingles(col: str, n: int = 3) -> Column:
     """Distinct n-gram (token-level) shingles of lowercased text.
 
     Native expression: split → slide an index over the token array →
@@ -108,21 +78,7 @@ def shingles(col, n: int = 3) -> Column:
     an HOF lambda is re-evaluated once per element, so the naive form
     re-tokenizes the whole text once per shingle (~50× slower on real docs).
     """
-    ref = _sql_name(col)
-    if ref is not None:
-        try:
-            return F.expr(_shingles_sql(ref, n))
-        except Exception:
-            pass
-    return F.transform(
-        F.array(tokens(col)),
-        lambda toks: F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1))),
-                lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-            )
-        ),
-    )[0]
+    return F.expr(_shingles_sql(ident(col, "shingles"), n))
 
 
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -144,46 +100,29 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
 
 def _shingle_hashes_sql(ref: str, n: int) -> str:
-    # mirrors shingle_hashes() below
     return (
         f"transform({_shingles_sql(ref, n)}, "
         f"__pqlv_s -> {_token_hash_sql('__pqlv_s')} % {MINHASH_M})"
     )
 
 
-def shingle_hashes(col, n: int = 3) -> Column:
+def shingle_hashes(col: str, n: int = 3) -> Column:
     """Portable 60-bit hashes of each shingle, reduced mod MINHASH_M."""
-    from pq_vector_spark.functions.text import token_hash
-
-    ref = _sql_name(col)
-    if ref is not None:
-        try:
-            return F.expr(_shingle_hashes_sql(ref, n))
-        except Exception:
-            pass
-    return F.transform(shingles(col, n), lambda s: token_hash(s) % MINHASH_M)
+    return F.expr(_shingle_hashes_sql(ident(col, "shingle_hashes"), n))
 
 
-def shingle_token_hashes(col, n: int = 3) -> Column:
+def shingle_token_hashes(col: str, n: int = 3) -> Column:
     """Portable 60-bit ``token_hash`` of each shingle (NOT reduced mod
     MINHASH_M) — the exact-Jaccard verification feature shared by
-    ``minhash_lsh_pairs`` and ``incremental_dedup_near``. One-shot parsed
-    for string column names, like :func:`shingle_hashes`."""
-    from pq_vector_spark.functions.text import token_hash
-
-    ref = _sql_name(col)
-    if ref is not None:
-        try:
-            return F.expr(
-                f"transform({_shingles_sql(ref, n)}, "
-                f"__pqlv_s -> {_token_hash_sql('__pqlv_s')})"
-            )
-        except Exception:
-            pass
-    return F.transform(shingles(col, n), lambda s: token_hash(s))
+    ``minhash_lsh_pairs`` and ``incremental_dedup_near``."""
+    ref = ident(col, "shingle_token_hashes")
+    return F.expr(
+        f"transform({_shingles_sql(ref, n)}, "
+        f"__pqlv_s -> {_token_hash_sql('__pqlv_s')})"
+    )
 
 
-def minhash_signature(col, n: int = 3, num_hashes: int = 32, seed: int = 42) -> Column:
+def minhash_signature(col: str, n: int = 3, num_hashes: int = 32, seed: int = 42) -> Column:
     """Array of ``num_hashes`` minhash values for a text column — one
     map-side expression, no shuffle, no Python.
 
@@ -193,76 +132,34 @@ def minhash_signature(col, n: int = 3, num_hashes: int = 32, seed: int = 42) -> 
     array, carrying all ``num_hashes`` running minima as an array accumulator
     — md5 runs once per shingle regardless of signature width.
     """
-    coeffs = _minhash_coeffs(num_hashes, seed)
-    ref = _sql_name(col)
-    if ref is not None:
-        coeff_sql = "array(" + ", ".join(
-            f"named_struct('a', CAST({a} AS BIGINT), 'b', CAST({b} AS BIGINT))"
-            for a, b in coeffs
-        ) + ")"
-        sql = (
-            f"aggregate({_shingle_hashes_sql(ref, n)}, "
-            f"array_repeat(CAST({MINHASH_P} AS BIGINT), {num_hashes}), "
-            f"(__pqlv_a, __pqlv_h) -> zip_with(__pqlv_a, {coeff_sql}, "
-            f"(__pqlv_m, __pqlv_c) -> least(__pqlv_m, "
-            f"(__pqlv_c.a * __pqlv_h + __pqlv_c.b) % {MINHASH_P}))"
-            f")"
-        )
-        try:
-            return F.expr(sql)
-        except Exception:
-            pass
-    hashes = shingle_hashes(col, n)
-    coeff_arr = F.array(
-        *[
-            F.struct(F.lit(a).cast("bigint").alias("a"), F.lit(b).cast("bigint").alias("b"))
-            for a, b in coeffs
-        ]
-    )
-    init = F.array_repeat(F.lit(MINHASH_P).cast("bigint"), num_hashes)
-    return F.aggregate(
-        hashes,
-        init,
-        lambda acc, h: F.zip_with(
-            acc, coeff_arr, lambda m, c: F.least(m, (c["a"] * h + c["b"]) % MINHASH_P)
-        ),
+    ref = ident(col, "minhash_signature")
+    coeff_sql = "array(" + ", ".join(
+        f"named_struct('a', CAST({a} AS BIGINT), 'b', CAST({b} AS BIGINT))"
+        for a, b in _minhash_coeffs(num_hashes, seed)
+    ) + ")"
+    return F.expr(
+        f"aggregate({_shingle_hashes_sql(ref, n)}, "
+        f"array_repeat(CAST({MINHASH_P} AS BIGINT), {num_hashes}), "
+        f"(__pqlv_a, __pqlv_h) -> zip_with(__pqlv_a, {coeff_sql}, "
+        f"(__pqlv_m, __pqlv_c) -> least(__pqlv_m, "
+        f"(__pqlv_c.a * __pqlv_h + __pqlv_c.b) % {MINHASH_P}))"
+        f")"
     )
 
 
-def _band_structs(sig_col, bands: int, rows_per_band: int):
+def _band_structs(sig_col: str, bands: int, rows_per_band: int):
     """array<struct<band int, key string>> of LSH band keys from a minhash
     signature array — ONE definition shared by ``minhash_lsh_pairs``,
     ``build_dedup_index`` and ``incremental_dedup_near`` so the banding
-    (hence index compatibility) can never drift between them. A plain
-    string column name takes the one-shot parsed SQL path (identical
-    tree; see the r16 note above)."""
-    ref = _sql_name(sig_col)
-    if ref is not None:
-        parts = []
-        for i in range(bands):
-            items = ", ".join(
-                f"{ref}[{i * rows_per_band + r}]" for r in range(rows_per_band)
-            )
-            parts.append(
-                f"named_struct('band', {i}, 'key', concat_ws(',', {items}))"
-            )
-        try:
-            return F.expr("array(" + ", ".join(parts) + ")")
-        except Exception:
-            pass
-        sig_col = F.col(sig_col)
-    return F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band"),
-                F.concat_ws(
-                    ",",
-                    *[sig_col[i * rows_per_band + r] for r in range(rows_per_band)],
-                ).alias("key"),
-            )
-            for i in range(bands)
-        ]
-    )
+    (hence index compatibility) can never drift between them."""
+    ref = ident(sig_col, "_band_structs")
+    parts = []
+    for i in range(bands):
+        items = ", ".join(
+            f"{ref}[{i * rows_per_band + r}]" for r in range(rows_per_band)
+        )
+        parts.append(f"named_struct('band', {i}, 'key', concat_ws(',', {items}))")
+    return F.expr("array(" + ", ".join(parts) + ")")
 
 
 def _expand_sorted_member_pairs(
@@ -567,6 +464,7 @@ def simhash(col, bits: int = 16, n: int = 1) -> Column:
     """SimHash signature over token (n=1) or shingle hashes: for each bit j,
     sum ±1 weighted by the j-th bit of each element hash; bit j of the
     signature is set when the sum is positive. Single map-side expression.
+    ``n > 1`` takes a column name (see :func:`shingle_hashes`).
     """
     hashes = shingle_hashes(col, n) if n > 1 else None
     if hashes is None:

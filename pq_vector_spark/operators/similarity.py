@@ -34,10 +34,7 @@ def cosine_topk(
 ) -> DataFrame:
     """Top-k rows by cosine similarity to a literal query vector —
     TakeOrderedAndProject plan, same shape as L2 brute force."""
-    # pass the NAME, not F.col(...): the one-shot SQL render of the
-    # unrolled chain (distance.py:_unrolled_expr) only fires for plain
-    # string names — a Column input costs ~dim×3 py4j round trips of
-    # fallback Column building per plan (r16)
+    # pass the NAME, not F.col(...): only a name unrolls into codegen
     scored = df.withColumn("cosine", cosine_similarity(vec_col, list(query)))
     order = [F.col("cosine").desc()]
     if id_col:
@@ -135,7 +132,7 @@ def multi_query_topk(
     """
     qids = [q[0] for q in queries]
     qmat = [q[1] for q in queries]
-    scores = multi_distances(F.col(vec_col), qmat, metric=metric)
+    scores = multi_distances(vec_col, qmat, metric=metric)
     asc = metric in ("l2", "sq_l2")
 
     cols = [F.col(id_col).alias("_cid")] if id_col else []

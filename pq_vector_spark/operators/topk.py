@@ -46,7 +46,7 @@ def brute_force_topk(
     semantics: WHERE clauses rank only surviving rows,
     src/df_vector/tests.rs:152-241).
     """
-    # string name, not F.col(...): lets the one-shot SQL render fire (r16)
+    # string name, not F.col(...): only a name unrolls into codegen
     d = array_distance(column, list(query))
     out = df
     if pre_filter is not None:

@@ -455,7 +455,7 @@ def indexed_topk_with_pending(
     col = column or load_index(spark, indexed_path).meta["column"]
     pend = spark.read.parquet(*dirs)
     if metric == "cosine":
-        # string name, not F.col(...): lets the one-shot SQL render fire (r16)
+        # string name, not F.col(...): only a name unrolls into codegen
         d = cosine_similarity(col, [float(x) for x in query])
         order = [F.col(DISTANCE_COL).desc()]
     else:

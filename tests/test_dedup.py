@@ -1325,14 +1325,75 @@ def test_ngram_jaccard_pairs_hot_shingle_streams(spark):
     assert fast == sorted(want)
 
 
-def test_sql_rendered_featurization_identical(spark):
-    """r16: the one-shot parsed SQL forms of shingles / shingle_hashes /
-    shingle_token_hashes / minhash_signature / _band_structs (string-name
-    inputs) must be bit-identical to the Column-op builders (Column
-    inputs force the fallback path) — including empty/NULL text, quotes,
-    backslashes, SQL-special characters, and unicode."""
-    from pyspark.sql import functions as F
+# Column-op reference implementations: the pre-render forms of the dedup
+# featurizers, kept verbatim as the oracle for the SQL-rendered forms.
 
+
+def _ref_shingles(col, n=3):
+    from pq_vector_spark.functions.text import tokens
+
+    return F.transform(
+        F.array(tokens(col)),
+        lambda toks: F.array_distinct(
+            F.transform(
+                F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1))),
+                lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
+            )
+        ),
+    )[0]
+
+
+def _ref_shingle_hashes(col, n=3):
+    from pq_vector_spark.functions.text import token_hash
+
+    return F.transform(_ref_shingles(col, n), lambda s: token_hash(s) % D.MINHASH_M)
+
+
+def _ref_shingle_token_hashes(col, n=3):
+    from pq_vector_spark.functions.text import token_hash
+
+    return F.transform(_ref_shingles(col, n), lambda s: token_hash(s))
+
+
+def _ref_minhash_signature(col, n=3, num_hashes=32, seed=42):
+    coeffs = D._minhash_coeffs(num_hashes, seed)
+    hashes = _ref_shingle_hashes(col, n)
+    coeff_arr = F.array(
+        *[
+            F.struct(F.lit(a).cast("bigint").alias("a"), F.lit(b).cast("bigint").alias("b"))
+            for a, b in coeffs
+        ]
+    )
+    init = F.array_repeat(F.lit(D.MINHASH_P).cast("bigint"), num_hashes)
+    return F.aggregate(
+        hashes,
+        init,
+        lambda acc, h: F.zip_with(
+            acc, coeff_arr, lambda m, c: F.least(m, (c["a"] * h + c["b"]) % D.MINHASH_P)
+        ),
+    )
+
+
+def _ref_band_structs(sig_col, bands, rows_per_band):
+    return F.array(
+        *[
+            F.struct(
+                F.lit(i).alias("band"),
+                F.concat_ws(
+                    ",",
+                    *[sig_col[i * rows_per_band + r] for r in range(rows_per_band)],
+                ).alias("key"),
+            )
+            for i in range(bands)
+        ]
+    )
+
+
+def test_sql_rendered_featurization_identical(spark):
+    """The SQL-rendered shingles / shingle_hashes / shingle_token_hashes /
+    minhash_signature / _band_structs must be bit-identical to the
+    Column-op reference implementations above — including empty/NULL text,
+    quotes, backslashes, SQL-special characters, and unicode."""
     from pq_vector_spark.operators.dedup import (
         _band_structs,
         minhash_signature,
@@ -1350,28 +1411,29 @@ def test_sql_rendered_featurization_identical(spark):
         ],
         "doc_id int, text string",
     )
+    text = F.col("text")
     for label, fast, slow in (
-        ("shingles", shingles("text", 3), shingles(F.col("text"), 3)),
+        ("shingles", shingles("text", 3), _ref_shingles(text, 3)),
         ("shingle_hashes", shingle_hashes("text", 3),
-         shingle_hashes(F.col("text"), 3)),
+         _ref_shingle_hashes(text, 3)),
         ("shingle_token_hashes", shingle_token_hashes("text", 3),
-         shingle_token_hashes(F.col("text"), 3)),
+         _ref_shingle_token_hashes(text, 3)),
         ("minhash", minhash_signature("text", 3, 32, 42),
-         minhash_signature(F.col("text"), 3, 32, 42)),
+         _ref_minhash_signature(text, 3, 32, 42)),
         ("minhash_n2_h16", minhash_signature("text", 2, 16, 7),
-         minhash_signature(F.col("text"), 2, 16, 7)),
+         _ref_minhash_signature(text, 2, 16, 7)),
     ):
         a = df.select(fast.alias("x")).collect()
         b = df.select(slow.alias("x")).collect()
         assert a == b, label
 
     sig = df.select(
-        "doc_id", minhash_signature(F.col("text"), 3, 32, 42).alias("_sig")
+        "doc_id", minhash_signature("text", 3, 32, 42).alias("_sig")
     )
     a = sig.select(F.explode(_band_structs("_sig", 8, 4)).alias("bk")).select(
         "bk.band", "bk.key"
     ).collect()
     b = sig.select(
-        F.explode(_band_structs(F.col("_sig"), 8, 4)).alias("bk")
+        F.explode(_ref_band_structs(F.col("_sig"), 8, 4)).alias("bk")
     ).select("bk.band", "bk.key").collect()
     assert a == b, "band_structs"

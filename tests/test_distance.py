@@ -255,3 +255,47 @@ def test_nan_scores_survive_multi_kernel(spark):
         }
         assert all(s is not None and math.isnan(s) for s in got[0]), f"dim={dim}: {got[0]!r}"
         assert all(s is not None and not math.isnan(s) for s in got[1])
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), float("-inf")])
+def test_nonfinite_literal_query_matches_sql_fold(spark, bad):
+    """A NaN/±inf query component keeps the unrolled chain (dim ≤
+    UNROLL_LIMIT) and equals the registered SQL functions' fold bit for
+    bit, or both are NaN."""
+    nan, inf = float("nan"), float("inf")
+    df = spark.createDataFrame(
+        [
+            (1, [1.0, 2.0, 3.0, 4.0]),
+            (2, [0.0, 0.0, 0.0, 0.0]),
+            (3, [inf, 1.0, -1.0, 0.5]),
+            (4, [-inf, nan, 0.0, 1.0]),
+            (5, [-3.5, 0.25, 7.0, -0.0]),
+            (6, None),
+            (7, [1.0, 2.0]),
+        ],
+        "id INT, v ARRAY<FLOAT>",
+    )
+    q = [0.5, bad, -1.25, 2.0]
+    qsql = ", ".join(f"CAST('{x!r}' AS DOUBLE)" for x in q)
+    for fn in (squared_l2, array_distance, dot_product, cosine_similarity):
+        name = fn.__name__
+        got_df = df.select("id", fn("v", q).alias("d"))
+        plan = got_df._jdf.queryExecution().optimizedPlan().toString()
+        assert "aggregate(" not in plan, name
+        got = {r["id"]: r["d"] for r in got_df.collect()}
+        want = {
+            r["id"]: r["d"]
+            for r in spark.sql(
+                f"SELECT id, {name}(v, array({qsql})) AS d FROM {{df}}", df=df
+            ).collect()
+        }
+        assert got.keys() == want.keys()
+        for i in want:
+            g, w = got[i], want[i]
+            if g is None or w is None:
+                assert g is None and w is None, (name, i)
+            elif math.isnan(w):
+                assert math.isnan(g), (name, i)
+            else:
+                assert g == w, (name, i, g, w)
+

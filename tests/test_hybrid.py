@@ -1,6 +1,7 @@
 """Hybrid BM25+cosine RRF retrieval tests."""
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from pq_vector_spark.operators.hybrid import hybrid_topk, rrf_fuse
@@ -24,48 +25,56 @@ def test_rrf_fuse_hand_computed(spark):
     assert out[1]["rrf_score"] > out[3]["rrf_score"] > out[2]["rrf_score"]
 
 
-def test_rrf_sql_path_matches_column_path(spark):
-    """r17: the one-shot SQL render of rrf_fuse must be bit-identical to
-    the Column path (forced via a backtick-hostile alias? no — forced by
-    monkeypatching the render off is brittle; instead compare against a
-    Column-path replica built inline)."""
-    from pq_vector_spark.operators import hybrid as H
-
-    lex = _ranked(spark, [(1, 1), (2, 2), (7, 3)])
-    sem = _ranked(spark, [(3, 1), (1, 2)])
-    via_sql = H._rrf_sql([lex, sem], "id", 10, 60)
-    assert via_sql is not None
-    # Column-path replica (the fallback body of rrf_fuse, verbatim)
+def _rrf_column_reference(ranked, id_col, k, k_rrf):
+    """The Column-op RRF fusion that ``rrf_fuse`` renders as one SQL call,
+    kept verbatim as the test oracle."""
     legs = [
         df.select(
-            F.col("id").alias("_id"),
-            (F.lit(1.0) / (F.lit(60.0) + F.col("rank").cast("double"))).alias(
+            F.col(id_col).alias("_id"),
+            (F.lit(1.0) / (F.lit(float(k_rrf)) + F.col("rank").cast("double"))).alias(
                 "_contrib"
             ),
         )
-        for df in (lex, sem)
+        for df in ranked
     ]
-    allrows = legs[0].unionByName(legs[1])
+    allrows = legs[0]
+    for leg in legs[1:]:
+        allrows = allrows.unionByName(leg)
     fused = allrows.groupBy("_id").agg(
         F.sum("_contrib").alias("rrf_score"),
         F.count(F.lit(1)).cast("int").alias("n_lists"),
     )
-    via_col = (
+    return (
         fused.orderBy(F.col("rrf_score").desc(), F.col("_id").asc())
-        .limit(10)
-        .select(F.col("_id").alias("id"), "rrf_score", "n_lists")
+        .limit(k)
+        .select(F.col("_id").alias(id_col), "rrf_score", "n_lists")
     )
+
+
+def _with_rank(df, order):
+    w = Window.orderBy(*order)
+    return df.select("*", F.row_number().over(w).cast("int").alias("rank"))
+
+
+def test_rrf_sql_path_matches_column_path(spark):
+    """rrf_fuse's one-shot SQL must be bit-identical to the Column-op
+    reference fusion (schema and values)."""
+    lex = _ranked(spark, [(1, 1), (2, 2), (7, 3)])
+    sem = _ranked(spark, [(3, 1), (1, 2)])
+    via_sql = rrf_fuse([lex, sem], "id", 10, k_rrf=60)
+    via_col = _rrf_column_reference([lex, sem], "id", 10, 60)
     assert via_sql.schema == via_col.schema
     assert [tuple(r) for r in via_sql.collect()] == [
         tuple(r) for r in via_col.collect()
     ]
 
 
-def test_hybrid_sql_fusion_matches_column_path(spark, monkeypatch):
-    """r17: hybrid_topk's one-shot fusion SQL must produce exactly what
-    the Column chain produces (schema + values), checked by disabling the
-    render and re-running the same inputs."""
-    from pq_vector_spark.operators import hybrid as H
+def test_hybrid_sql_fusion_matches_column_path(spark):
+    """hybrid_topk's one-shot fusion SQL must produce exactly what the
+    Column-op reference chain produces (schema + values) over the same two
+    candidate lists."""
+    from pq_vector_spark.functions.text import bm25_topk
+    from pq_vector_spark.operators.similarity import cosine_topk
 
     docs = spark.createDataFrame(
         [
@@ -85,17 +94,27 @@ def test_hybrid_sql_fusion_matches_column_path(spark, monkeypatch):
         ],
         "vec_id: bigint, embedding: array<float>",
     )
-    kwargs = dict(
-        vectors=vecs, vec_id_col="vec_id", pool=4, k_rrf=60
-    )
+    terms, qvec = ["spark", "window"], [1.0, 0.0, 0.0]
     via_sql = hybrid_topk(
-        docs, "text", "doc_id", ["spark", "window"], [1.0, 0.0, 0.0], 3,
-        **kwargs,
+        docs, "text", "doc_id", terms, qvec, 3,
+        vectors=vecs, vec_id_col="vec_id", pool=4, k_rrf=60,
     )
-    monkeypatch.setattr(H, "_hybrid_fuse_sql", lambda *a, **k: None)
-    via_col = hybrid_topk(
-        docs, "text", "doc_id", ["spark", "window"], [1.0, 0.0, 0.0], 3,
-        **kwargs,
+    lex = _with_rank(
+        bm25_topk(docs, "text", "doc_id", terms, k=4),
+        [F.col("score").desc(), F.col("doc_id").asc()],
+    ).select(F.col("doc_id").alias("_hid"), "rank")
+    sem = _with_rank(
+        cosine_topk(vecs, "embedding", qvec, 4, id_col="vec_id"),
+        [F.col("cosine").desc(), F.col("vec_id").asc()],
+    ).select(F.col("vec_id").alias("_hid"), "rank")
+    fused = _rrf_column_reference([lex, sem], "_hid", 3, 60)
+    via_col = _with_rank(
+        fused, [F.col("rrf_score").desc(), F.col("_hid").asc()]
+    ).select(
+        F.col("_hid").alias("doc_id"),
+        F.round("rrf_score", 6).alias("rrf_score"),
+        "n_lists",
+        "rank",
     )
     assert via_sql.schema == via_col.schema
     assert [tuple(r) for r in via_sql.collect()] == [

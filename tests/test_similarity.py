@@ -171,6 +171,32 @@ def test_multi_query_topk_matches_similarity_join(spark, corpus):
     assert b == c  # bit-identical scores, same ranking
 
 
+def test_multi_query_topk_small_batch_stays_unrolled(spark):
+    """n_q × d ≤ MULTI_UNROLL_BUDGET keeps the unrolled codegen chain (no
+    interpreted aggregate fold in the plan) and its scores equal the
+    fold's exactly."""
+    from pq_vector_spark.functions.distance import multi_distances
+    from pq_vector_spark.operators.similarity import multi_query_topk
+
+    rng = np.random.default_rng(17)
+    rows = [(int(i), [float(x) for x in rng.random(8, dtype=np.float32)]) for i in range(40)]
+    df = spark.createDataFrame(rows, "cid BIGINT, vec ARRAY<FLOAT>")
+    queries = [(q, [float(x) for x in rng.random(8)]) for q in ("a", "b")]
+    out = multi_query_topk(df, "vec", queries, len(rows), id_col="cid")
+    assert "aggregate(" not in out._jdf.queryExecution().optimizedPlan().toString()
+
+    fold = multi_distances(F.col("vec"), [q for _, q in queries])
+    ref = df.select("cid", fold.alias("s"))
+    assert "aggregate(" in ref._jdf.queryExecution().optimizedPlan().toString()
+    want = {
+        (qid, r["cid"]): r["s"][i]
+        for r in ref.collect()
+        for i, (qid, _) in enumerate(queries)
+    }
+    got = {(r["qid"], r["cid"]): r["score"] for r in out.collect()}
+    assert got == want
+
+
 def test_multi_query_topk_cosine(spark, corpus):
     from pq_vector_spark.operators.similarity import multi_query_topk
 

@@ -134,13 +134,59 @@ def test_bm25_topk_golden(spark):
     assert rows[0]["score"] > rows[1]["score"] > 0.0
 
 
-def test_bm25_sql_path_matches_column_path(spark):
-    """r17: the one-shot SQL render of the whole bm25 pipeline must be
-    bit-identical to the Column-builder path (schema and values), with
-    non-default k1/b literals rendered exactly. The Column path is forced
-    by passing a Column text arg (SQL render requires plain names)."""
-    from pyspark.sql import functions as F
+def _bm25_column_reference(df, text_col, id_col, query_terms, k=10, k1=1.2, b=0.75):
+    """The Column-op BM25 pipeline that ``bm25_topk`` renders as one SQL
+    call, kept verbatim as the test oracle."""
+    terms = [str(t).lower() for t in query_terms]
+    base = df.select(
+        F.col(id_col).alias("_id"),
+        T.tokens(text_col).alias("_toks"),
+    ).select("*", F.size("_toks").cast("bigint").alias("dl"))
+    toks = base.select(
+        "_id", "dl", F.explode("_toks").alias("term")
+    ).filter(F.col("term").isin(terms))
+    tf = toks.groupBy("_id", "dl", "term").agg(
+        F.count(F.lit(1)).cast("bigint").alias("tf")
+    )
+    dfreq = (
+        tf.filter(F.col("tf") > 0)
+        .groupBy("term")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("df_t"))
+    )
+    stats = base.agg(
+        F.count(F.lit(1)).cast("bigint").alias("_n"),
+        F.sum("dl").cast("double").alias("_total_dl"),
+    ).select(
+        "*", (F.col("_total_dl") / F.col("_n").cast("double")).alias("avgdl")
+    )
+    idf = F.log(
+        F.lit(1.0)
+        + (F.col("_n").cast("double") - F.col("df_t") + F.lit(0.5))
+        / (F.col("df_t").cast("double") + F.lit(0.5))
+    )
+    tf_part = (F.col("tf").cast("double") * F.lit(k1 + 1.0)) / (
+        F.col("tf").cast("double")
+        + F.lit(k1)
+        * (F.lit(1.0 - b) + F.lit(b) * F.col("dl").cast("double") / F.col("avgdl"))
+    )
+    scored = (
+        tf.join(F.broadcast(dfreq), "term")
+        .crossJoin(F.broadcast(stats))
+        .select("*", (idf * tf_part).alias("_s"))
+    )
+    return (
+        scored.groupBy("_id")
+        .agg(F.round(F.sum("_s"), 4).alias("score"))
+        .orderBy(F.col("score").desc(), F.col("_id").asc())
+        .limit(k)
+        .select(F.col("_id").alias(id_col), "score")
+    )
 
+
+def test_bm25_sql_path_matches_column_path(spark):
+    """The one-shot SQL form of bm25_topk must be bit-identical to the
+    Column-op reference pipeline (schema and values), with non-default
+    k1/b literals rendered exactly."""
     docs = spark.createDataFrame(
         [
             (1, "spark spark window pad pad"),
@@ -154,14 +200,8 @@ def test_bm25_sql_path_matches_column_path(spark):
     terms = ["spark", "window", "hash", "it's"]
     for k1, b in [(1.2, 0.75), (1.7, 0.3)]:
         via_sql = T.bm25_topk(docs, "text", "doc_id", terms, k=10, k1=k1, b=b)
-        via_col = T.bm25_topk(
-            docs.withColumn("t2", F.col("text")),
-            F.col("t2"),
-            "doc_id",
-            terms,
-            k=10,
-            k1=k1,
-            b=b,
+        via_col = _bm25_column_reference(
+            docs, "text", "doc_id", terms, k=10, k1=k1, b=b
         )
         assert via_sql.schema == via_col.schema
         assert [tuple(r) for r in via_sql.collect()] == [
@@ -437,12 +477,47 @@ def test_token_ngrams_upto_equals_per_n_concat(spark):
         assert got == want, f"n_max={n_max}"
 
 
+def _ref_token_ngrams(col, n):
+    """Column-op reference for T._token_ngrams (the pre-render form)."""
+    return F.transform(
+        F.array(T.tokens(col)),
+        lambda toks: F.when(
+            F.size(toks) >= n,
+            F.transform(
+                F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1))),
+                lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
+            ),
+        ).otherwise(F.array().cast("array<string>")),
+    )[0]
+
+
+def _ref_token_ngrams_upto(col, n_max):
+    """Column-op reference for T._token_ngrams_upto (the pre-render form)."""
+    return F.transform(
+        F.array(T.tokens(col)),
+        lambda toks: F.flatten(
+            F.transform(
+                F.sequence(F.lit(1), F.lit(int(n_max))),
+                lambda n: F.when(
+                    F.size(toks) >= n,
+                    F.transform(
+                        F.sequence(
+                            F.lit(1),
+                            F.greatest(F.size(toks) - (n - 1), F.lit(1)),
+                        ),
+                        lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
+                    ),
+                ).otherwise(F.array().cast("array<string>")),
+            )
+        ),
+    )[0]
+
+
 def test_sql_rendered_ngrams_identical(spark):
-    """r16: the one-shot parsed SQL forms of _token_ngrams /
-    _token_ngrams_upto (string-name inputs) must be bit-identical to the
-    Column-op builders (Column inputs force the fallback path) —
-    including empty/NULL text, whitespace-only docs, SQL-special
-    characters, and unicode."""
+    """The SQL-rendered _token_ngrams / _token_ngrams_upto must be
+    bit-identical to the Column-op reference implementations above — including
+    empty/NULL text, whitespace-only docs, SQL-special characters, and
+    unicode."""
     docs = spark.createDataFrame(
         [
             (1, ""), (2, None), (3, "a"), (4, "  x\t y\nz  "),
@@ -452,19 +527,17 @@ def test_sql_rendered_ngrams_identical(spark):
         ],
         "doc_id int, text string",
     )
+    text = F.col("text")
     for label, fast, slow in (
-        ("ngrams_n1", T._token_ngrams("text", 1),
-         T._token_ngrams(F.col("text"), 1)),
-        ("ngrams_n3", T._token_ngrams("text", 3),
-         T._token_ngrams(F.col("text"), 3)),
-        ("ngrams_n9", T._token_ngrams("text", 9),
-         T._token_ngrams(F.col("text"), 9)),
+        ("ngrams_n1", T._token_ngrams("text", 1), _ref_token_ngrams(text, 1)),
+        ("ngrams_n3", T._token_ngrams("text", 3), _ref_token_ngrams(text, 3)),
+        ("ngrams_n9", T._token_ngrams("text", 9), _ref_token_ngrams(text, 9)),
         ("upto_1", T._token_ngrams_upto("text", 1),
-         T._token_ngrams_upto(F.col("text"), 1)),
+         _ref_token_ngrams_upto(text, 1)),
         ("upto_2", T._token_ngrams_upto("text", 2),
-         T._token_ngrams_upto(F.col("text"), 2)),
+         _ref_token_ngrams_upto(text, 2)),
         ("upto_4", T._token_ngrams_upto("text", 4),
-         T._token_ngrams_upto(F.col("text"), 4)),
+         _ref_token_ngrams_upto(text, 4)),
     ):
         a = docs.select(fast.alias("x")).collect()
         b = docs.select(slow.alias("x")).collect()
