@@ -775,11 +775,10 @@ def _knn_sql(spark, sf_dir):
 
 
 def _knn_auto(spark, sf_dir):
-    """Automatic top-k PLAN interception: the query text is a CTE the
-    textual matcher (plans/sql.py regex) cannot see, so the only way this
-    can take the indexed path is the optimized-plan interceptor
-    (plans/intercept.py ≙ reference physical rule src/df_vector/physical.rs:
-    20-229). nprobe = n_clusters ⇒ candidate set is all rows ⇒ exact.
+    """Automatic top-k PLAN interception: the query text is a CTE, which
+    the optimized-plan interceptor (plans/intercept.py ≙ reference physical
+    rule src/df_vector/physical.rs:20-229) normalizes like any other
+    spelling. nprobe = n_clusters ⇒ candidate set is all rows ⇒ exact.
     The CollectMetrics assertion makes the row FAIL (not silently pass on
     the brute-force fallback) if interception stops firing."""
     from pyspark.sql import Observation
@@ -810,9 +809,8 @@ def _knn_auto(spark, sf_dir):
 def _knn_auto_cosine(spark, sf_dir):
     """Plan interception for the EXTENSION metric: ORDER BY
     cosine_similarity(...) DESC over a registered indexed table routes to
-    the IVF cosine path (index/search.py metric='cosine'). CTE text again
-    so only the optimized-plan matcher can fire; nprobe = n_clusters ⇒
-    exact (all clusters probed)."""
+    the IVF cosine path (index/search.py metric='cosine'). CTE text again;
+    nprobe = n_clusters ⇒ exact (all clusters probed)."""
     from pyspark.sql import Observation
 
     from pq_vector_spark.plans.sql import pq_sql, register_indexed_table

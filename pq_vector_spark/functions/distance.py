@@ -22,6 +22,7 @@ Reference parity notes:
 
 from __future__ import annotations
 
+import logging
 import math
 from typing import Sequence, Union
 
@@ -33,6 +34,8 @@ from pyspark.sql import functions as F
 from pq_vector_spark.functions.sqltext import dlit, ident
 
 VectorLike = Union[str, Column, Sequence[float]]
+
+_LOG = logging.getLogger("pq_vector_spark.distance")
 
 
 def _as_vector_col(v: VectorLike) -> Column:
@@ -378,51 +381,64 @@ def cosine_similarity(a: VectorLike, b: VectorLike, *, dim_hint: int | None = No
     return F.when(denom == 0, F.lit(float("nan"))).otherwise(dot_product(a, b) / denom)
 
 
+# The SQL text of each distance function as a native higher-order-function
+# fold over ``{a}`` and ``{b}``. ``register_sql_functions`` registers these
+# bodies as SQL functions, ``plans/sql.expand_vector_functions`` inlines them
+# into query text (Spark 4 forbids SQL scalar UDFs inside Sort), and
+# ``plans/intercept`` matches the plans they produce.
+_SQ_FOLD = (
+    "aggregate(zip_with(cast({a} as array<double>), cast({b} as array<double>),"
+    " (x, y) -> (x - y) * (x - y)), cast(0.0 as double), (acc, x) -> acc + x)"
+)
+_DOT_FOLD = (
+    "aggregate(zip_with(cast({a} as array<double>), cast({b} as array<double>),"
+    " (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)"
+)
+_NORM_FOLD = (
+    "sqrt(aggregate(transform(cast({v} as array<double>), x -> x * x),"
+    " cast(0.0 as double), (acc, x) -> acc + x))"
+)
+SQL_FOLDS = {
+    "squared_l2": _SQ_FOLD,
+    "array_distance": f"sqrt({_SQ_FOLD})",
+    "dot_product": _DOT_FOLD,
+    # zero-norm ⇒ 0/0 ⇒ NaN (never an ANSI DIVIDE_BY_ZERO; NULL stays NULL:
+    # a NULL denom takes the ELSE branch, whose division propagates it). The
+    # O(d) denominator is bound ONCE through a single-element transform
+    # lambda: Catalyst's subexpression elimination does not dedupe across
+    # CASE branches, so the naive CASE form evaluated both norms twice.
+    "cosine_similarity": (
+        "transform(array(("
+        + _NORM_FOLD.format(v="{a}")
+        + " * "
+        + _NORM_FOLD.format(v="{b}")
+        + ")), _pq_d -> CASE WHEN _pq_d = 0 THEN cast('NaN' as double) ELSE "
+        + _DOT_FOLD
+        + " / _pq_d END)[0]"
+    ),
+}
+
+
 def register_sql_functions(spark: SparkSession) -> None:
     """Expose the distance functions to SQL text queries.
 
     ≙ the reference registering its rewrite + array functions on the session
-    (src/df_vector/session.rs:16-35). Implemented as named lambda-free SQL
-    wrappers over the same native expressions so ``spark.sql("... ORDER BY
-    array_distance(vec, array(...)) ...")`` works verbatim.
+    (src/df_vector/session.rs:16-35): SQL functions whose bodies are the
+    ``SQL_FOLDS`` folds, so ``spark.sql("SELECT array_distance(vec,
+    array(...)) ...")`` works verbatim outside ORDER BY. A Spark build that
+    rejects ``CREATE TEMPORARY FUNCTION`` logs a warning; ``pq_sql`` still
+    works there, because it inlines the folds into the query text.
     """
-    sq_expr = (
-        "aggregate(zip_with(cast(a as array<double>), cast(b as array<double>),"
-        " (x, y) -> (x - y) * (x - y)), cast(0.0 as double), (acc, x) -> acc + x)"
-    )
-    dot_expr = (
-        "aggregate(zip_with(cast(a as array<double>), cast(b as array<double>),"
-        " (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)"
-    )
-    norm = (
-        "sqrt(aggregate(transform(cast({v} as array<double>), x -> x * x),"
-        " cast(0.0 as double), (acc, x) -> acc + x))"
-    )
-    cos_denom = f"({norm.format(v='a')} * {norm.format(v='b')})"
-    defs = {
-        "squared_l2": sq_expr,
-        "array_distance": f"sqrt({sq_expr})",
-        "dot_product": dot_expr,
-        # zero-norm ⇒ 0/0 ⇒ NaN (never an ANSI DIVIDE_BY_ZERO; NULL stays
-        # NULL: a NULL denom makes the CASE take the ELSE branch whose
-        # division propagates it). The O(d) denominator is bound ONCE via a
-        # single-element transform lambda — Catalyst's subexpression
-        # elimination does not dedupe across CASE branches, so the naive
-        # CASE form evaluated both norms twice per row.
-        "cosine_similarity": (
-            f"transform(array({cos_denom}), _pq_d -> "
-            f"CASE WHEN _pq_d = 0 THEN cast('NaN' as double) "
-            f"ELSE {dot_expr} / _pq_d END)[0]"
-        ),
-    }
-    for name, expr in defs.items():
+    from pyspark.errors import AnalysisException
+
+    for name, fold in SQL_FOLDS.items():
         try:
             spark.sql(
                 f"CREATE OR REPLACE TEMPORARY FUNCTION {name}(a ARRAY<DOUBLE>, b ARRAY<DOUBLE>) "
-                f"RETURNS DOUBLE RETURN {expr}"
+                f"RETURNS DOUBLE RETURN {fold.format(a='a', b='b')}"
             )
-        except Exception:
-            # Spark build without SQL scalar UDFs: the DataFrame-API
-            # functions above still work, and pq_sql() rewrites
-            # array_distance calls into them itself.
-            pass
+        except AnalysisException as e:
+            _LOG.warning(
+                "SQL function %s not registered (%s); plain spark.sql cannot "
+                "call it, pq_sql inlines it", name, e,
+            )

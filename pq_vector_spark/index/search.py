@@ -28,6 +28,7 @@ from typing import Optional, Sequence
 import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from pq_vector_spark.functions.distance import array_distance
 from pq_vector_spark.index.build import CLUSTER_COL, INDEX_DIR, assign_clusters
@@ -282,6 +283,7 @@ def indexed_topk(
     keep_distance: bool = False,
     observation=None,
     metric: str = "l2",
+    _layout_schema: Optional[StructType] = None,
 ) -> DataFrame:
     """Top-k over an indexed table (built by build.py).
 
@@ -295,6 +297,9 @@ def indexed_topk(
     probing centroids with the same L2 probe as the batch kernel
     (operators/similarity.py:ivf_multi_query_topk) — benched at 1M×256 to
     recall@100 = 1.0 at nprobe=16/1000.
+
+    ``_layout_schema`` is the layout's schema when the caller already has it
+    (plan interception); reading with it skips Parquet schema inference.
     """
     if metric not in ("l2", "cosine"):
         raise ValueError(f"unknown metric {metric!r}; choose 'l2' or 'cosine'")
@@ -308,7 +313,8 @@ def indexed_topk(
     q = _check_query_dim(query, idx.meta["dim"])
 
     probed = nearest_centroids(q, idx.centroids, opts.nprobe)
-    df = spark.read.parquet(path)
+    reader = spark.read if _layout_schema is None else spark.read.schema(_layout_schema)
+    df = reader.parquet(path)
     # The probed-cluster predicate pushes to the parquet scan; the
     # cluster-sorted layout turns it into file/row-group skipping. Beyond
     # spark.sql.parquet.pushdown.inFilterThreshold (default 10) parquet-mr

@@ -2,8 +2,8 @@
 reference's physical-optimizer rule (reference: src/df_vector/physical.rs:20-229,
 wired at src/df_vector/session.rs:16-35).
 
-Where ``plans/sql.py`` pattern-matches the SQL *text*, this module matches
-the *optimized logical plan* of an already-analyzed DataFrame, so any query
+This module matches the *optimized logical plan* of an already-analyzed
+DataFrame — ``plans/sql.pq_sql`` runs every query through it — so any query
 that Catalyst normalizes into the canonical shape
 
   GlobalLimit k
@@ -35,6 +35,7 @@ reference's rule declining to fire.
 
 from __future__ import annotations
 
+import json
 import logging
 import os
 import re
@@ -43,6 +44,7 @@ from typing import Dict, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 _LOG = logging.getLogger("pq_vector_spark.intercept")
 
@@ -170,7 +172,6 @@ def _persist_codes_registration(
     Hadoop-compatible URL goes through the JVM FileSystem (same split as
     the IVF sidecar writer, index/build.py:_write_sidecar)."""
     import io
-    import json
 
     import numpy as np
 
@@ -229,7 +230,6 @@ def _load_codes_registration(spark, indexed_path: str):
     ``(True, None)`` so interception degrades to the raw IVF probe, never
     to an error (the registration is an optimization hint, not data)."""
     import io
-    import json
 
     import numpy as np
 
@@ -525,10 +525,20 @@ def _match_norm(e):
     return _strip_cast(base)
 
 
+def _literal_vector(lit) -> list:
+    """The array Literal's doubles in three py4j calls instead of one per
+    element: ``Arrays.toString`` prints each double with enough digits to
+    round-trip exactly (NaN and ±Infinity included), and ``float`` parses
+    that text back to the same bits."""
+    from pyspark import SparkContext
+
+    text = SparkContext._jvm.java.util.Arrays.toString(lit.value().toDoubleArray())
+    return [float(x) for x in text[1:-1].split(",")] if text != "[]" else []
+
+
 def _match_l2_sort_expr(expr):
-    """Match the canonical L2 expression our SQL expansion / registration
-    produces (plans/sql.py:_FN_EXPANSIONS, functions/distance.py:
-    register_sql_functions):
+    """Match the canonical L2 expression of ``functions/distance.SQL_FOLDS``
+    (inlined by ``pq_sql``, registered by ``register_sql_functions``):
 
       [Sqrt] ArrayAggregate(ZipWith(col, lit, (x,y)->(x-y)*(x-y)),
                             0.0, (acc,x)->acc+x, id->id)
@@ -565,13 +575,11 @@ def _match_l2_sort_expr(expr):
     ok_yx = _is_sub(m_l, b_id, a_id) and _is_sub(m_r, b_id, a_id)
     if not (ok_xy or ok_yx):
         return None
-    vec = [float(x) for x in lit.value().toDoubleArray()]
-    return attr, vec, has_sqrt
+    return attr, _literal_vector(lit), has_sqrt
 
 
 def _match_cosine_sort_expr(expr):
-    """Match the single-eval cosine expansion (plans/sql.py / distance.py
-    register_sql_functions):
+    """Match the single-eval cosine fold of ``functions/distance.SQL_FOLDS``:
 
       transform(array(norm(col) * norm(lit)),
                 d -> CASE WHEN d = 0 THEN NaN ELSE dot(col, lit) / d END)[0]
@@ -638,8 +646,7 @@ def _match_cosine_sort_expr(expr):
         return None
     if _eid(attr) != _eid(norm_attr) or not lit.semanticEquals(norm_lit):
         return None
-    vec = [float(x) for x in lit.value().toDoubleArray()]
-    return attr, vec
+    return attr, _literal_vector(lit)
 
 
 def _attr_only_project(jnode, allow_alias_eid: Optional[int] = None) -> Optional[list]:
@@ -705,8 +712,8 @@ def _unqualified_sql(spark, jexpr) -> str:
 
 
 def _try_pq_route(
-    spark, df, path, column, vec, k, tie_break, options, observation,
-    dist_alias=None,
+    spark, df, path, layout_schema, column, vec, k, tie_break, options,
+    observation, dist_alias=None,
 ):
     """Attempt the IVF-PQ interception route for an L2, unfiltered top-k
     over ``path``. Returns ``(out_df, obs_consumed)``:
@@ -736,9 +743,8 @@ def _try_pq_route(
         # ivfpq_topk's output is the raw layout minus the cluster column —
         # plus, when the query projects the distance itself, the re-rank
         # stage's exact distance column (renamed below); a projection
-        # outside that set cannot take this route (schema-only probe — no
-        # job)
-        avail = set(spark.read.parquet(path).columns) - {CLUSTER_COL}
+        # outside that set cannot take this route
+        avail = set(layout_schema.fieldNames()) - {CLUSTER_COL}
         if dist_alias is not None:
             avail = avail | {dist_alias}
         if not set(df.columns) <= avail:
@@ -949,6 +955,14 @@ def _try_intercept(spark, df, options, observation, indexed_tables):
     )
     if path is None:
         _decline(f"path-not-indexed: {scan_path} is not a registered indexed table")
+    # re-read the layout with the schema the plan already resolved: Parquet
+    # schema inference costs one Spark job per read. A scan read with a
+    # user schema that omits the cluster column still infers.
+    from pq_vector_spark.index.build import CLUSTER_COL
+
+    layout_schema = StructType.fromJson(json.loads(rel.schema().json()))
+    if CLUSTER_COL not in layout_schema.fieldNames():
+        layout_schema = spark.read.parquet(path).schema
 
     pre = None
     for c in conds:
@@ -958,7 +972,7 @@ def _try_intercept(spark, df, options, observation, indexed_tables):
         # analysis-only resolution probe (no job): a condition the rebuilt
         # scan can't resolve declines HERE, before an Observation could be
         # attached to a plan that then fails.
-        spark.read.parquet(path).filter(pre).schema
+        spark.read.schema(layout_schema).parquet(path).filter(pre).schema
 
     # Prefer the doubly-pruned IVF-PQ plan (cluster prune × m-byte ADC
     # codes scan × exact re-rank) when a codes sidecar is registered for
@@ -970,8 +984,8 @@ def _try_intercept(spark, df, options, observation, indexed_tables):
     # falls back to the raw IVF probe below, never to brute force.
     if metric == "l2" and pre is None:
         pq_out, obs_consumed = _try_pq_route(
-            spark, df, path, attr.name(), vec, k, tie_break, options, observation,
-            dist_alias=dist_alias,
+            spark, df, path, layout_schema, attr.name(), vec, k, tie_break,
+            options, observation, dist_alias=dist_alias,
         )
         if pq_out is not None:
             return pq_out
@@ -996,6 +1010,7 @@ def _try_intercept(spark, df, options, observation, indexed_tables):
         observation=observation,
         metric=metric,
         keep_distance=dist_alias is not None,
+        _layout_schema=layout_schema,
     )
     if dist_alias is not None:
         # the query projects the distance/similarity value itself; the

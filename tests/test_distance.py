@@ -57,6 +57,24 @@ def test_sql_registration(spark):
     assert got == pytest.approx(5.0)
 
 
+def test_failed_sql_registration_is_logged(caplog):
+    """A session that rejects CREATE TEMPORARY FUNCTION logs one warning per
+    function instead of failing silently."""
+    from pyspark.errors import AnalysisException
+
+    from pq_vector_spark.functions.distance import SQL_FOLDS, register_sql_functions
+
+    class _Rejecting:
+        def sql(self, text):
+            raise AnalysisException(message="SQL scalar functions are not supported")
+
+    with caplog.at_level("WARNING", logger="pq_vector_spark.distance"):
+        register_sql_functions(_Rejecting())
+    warned = [r.getMessage() for r in caplog.records if r.levelname == "WARNING"]
+    assert len(warned) == len(SQL_FOLDS)
+    assert all("not registered" in m for m in warned)
+
+
 # ---------------- wide-vector Arrow kernel (round-2) ----------------
 
 

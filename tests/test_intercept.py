@@ -1,6 +1,6 @@
 """Plan-level top-k interception tests (plans/intercept.py) — the PySpark
-analogue of the reference's physical-optimizer rule firing on query shapes
-the TEXTUAL matcher cannot see (CTEs, subselects, DataFrame API).
+analogue of the reference's physical-optimizer rule, firing however the query
+is written (plain SQL, CTEs, subselects, DataFrame API).
 ≙ reference rule guards: src/df_vector/physical.rs:134-177."""
 
 import numpy as np
@@ -8,10 +8,10 @@ import pytest
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
+from pq_vector_spark.functions.distance import SQL_FOLDS
 from pq_vector_spark.index.build import build_index
 from pq_vector_spark.plans.intercept import try_intercept_topk
 from pq_vector_spark.plans.sql import (
-    _FN_EXPANSIONS,
     expand_vector_functions,
     pq_sql,
     register_indexed_table,
@@ -46,8 +46,8 @@ def _brute(spark, sql):
 
 
 def test_cte_shape_intercepts_and_is_exact(spark, icpt_table):
-    """The textual regex cannot match a CTE; the plan interceptor must, and
-    with nprobe = n_clusters the answer equals brute force exactly."""
+    """A CTE intercepts, and with nprobe = n_clusters the answer equals
+    brute force exactly."""
     q = (
         "WITH c AS (SELECT id, vec FROM icpt_vectors) "
         f"SELECT id FROM c ORDER BY array_distance(vec, {VEC}), id LIMIT 10"
@@ -118,12 +118,25 @@ def test_filter_string_literal_containing_alias_dot(spark, icpt_table):
 def test_dataframe_api_intercepts(spark, icpt_table):
     """DataFrame-API query (F.expr HOF distance) over the registered view
     intercepts too — plan matching is representation-agnostic."""
-    dist = _FN_EXPANSIONS["array_distance"].format(a="vec", b=VEC)
+    dist = SQL_FOLDS["array_distance"].format(a="vec", b=VEC)
     df = spark.table("icpt_vectors").orderBy(F.expr(dist)).limit(7).select("id")
     hit = try_intercept_topk(spark, df, options=VectorTopKOptions(nprobe=N_CLUSTERS))
     assert hit is not None
     assert hit.columns == ["id"]
     assert len(hit.collect()) == 7
+
+
+def test_user_schema_without_cluster_column_intercepts(spark, icpt_table):
+    """A layout read with a schema that omits the cluster column still
+    intercepts: the rewrite re-reads the layout with its full schema."""
+    dist = SQL_FOLDS["array_distance"].format(a="vec", b=VEC)
+    df = (
+        spark.read.schema("id INT, vec ARRAY<FLOAT>").parquet(icpt_table["out"])
+        .orderBy(F.expr(dist), "id").limit(5)
+    )
+    hit = try_intercept_topk(spark, df, options=VectorTopKOptions(nprobe=N_CLUSTERS))
+    assert hit is not None
+    assert hit.collect() == df.collect()
 
 
 def test_squared_l2_sort_intercepts(spark, icpt_table):
@@ -203,6 +216,47 @@ def test_wrong_lambda_shape_declines(spark, icpt_table):
     )
     df = spark.table("icpt_vectors").orderBy(F.expr(evil)).limit(5).select("id")
     assert try_intercept_topk(spark, df) is None
+
+
+@pytest.mark.parametrize("fn,direction", [("array_distance", "ASC"), ("cosine_similarity", "DESC")])
+def test_literal_vector_fetch_is_bit_exact(spark, icpt_table, fn, direction):
+    """The one-call literal fetch returns the same bits as converting the
+    Literal element by element, for awkward doubles too."""
+    import math
+    import struct
+
+    from pq_vector_spark.plans.intercept import (
+        _match_cosine_sort_expr,
+        _match_l2_sort_expr,
+    )
+
+    lit_sql = (
+        "array(-0.0D, 4.9E-324D, 1E308D, 1E-300D, cast('NaN' as double), "
+        "cast('Infinity' as double), cast('-Infinity' as double), 0.1D)"
+    )
+    q = f"SELECT id FROM icpt_vectors ORDER BY {fn}(vec, {lit_sql}) {direction} LIMIT 3"
+    node = spark.sql(expand_vector_functions(q))._jdf.queryExecution().optimizedPlan()
+    while node.getClass().getSimpleName() != "Sort":
+        node = node.children().apply(0)
+    key = node.order().apply(0).child()
+
+    def literals(e):
+        if e.getClass().getSimpleName() == "Literal" and e.dataType().simpleString() == "array<double>":
+            yield e
+        ch = e.children()
+        for i in range(ch.size()):
+            yield from literals(ch.apply(i))
+
+    lit = next(literals(key))
+    want = [float(x) for x in lit.value().toDoubleArray()]
+    matcher = _match_l2_sort_expr if fn == "array_distance" else _match_cosine_sort_expr
+    got = matcher(key)[1]
+
+    def bits(v):
+        return "nan" if math.isnan(v) else struct.pack(">d", v)
+
+    assert len(want) == 8
+    assert [bits(v) for v in got] == [bits(v) for v in want]
 
 
 # ---------------------------------------------------------- decline telemetry
@@ -357,7 +411,7 @@ def test_sidecar_cluster_projection_declines_cleanly(
     from pq_vector_spark.index.build import CLUSTER_COL
     from pq_vector_spark.plans.intercept import last_decline_reason
 
-    dist = _FN_EXPANSIONS["array_distance"].format(a="vec", b=VEC)
+    dist = SQL_FOLDS["array_distance"].format(a="vec", b=VEC)
     df = (
         spark.read.parquet(icpt_table["out"])
         .orderBy(F.expr(dist), F.col("id"))
