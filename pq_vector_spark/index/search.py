@@ -47,36 +47,13 @@ class LoadedIndex:
     centroids: np.ndarray  # (n_clusters, dim) f32, row id = cluster id
 
 
-def _load_sidecar_local(path: str):
-    """Driver-side sidecar read for local paths — the sidecar is tiny
-    (centroids ≤ 100k×dim floats), so two Spark jobs just to read it would
-    dominate small-query latency. Returns None when the path isn't local."""
-    import glob
-    import os
-
-    root = path[len("file://"):] if path.startswith("file://") else path
-    if "://" in root or not os.path.isdir(os.path.join(root, INDEX_DIR)):
-        return None
-    meta_parts = sorted(glob.glob(os.path.join(root, INDEX_DIR, "meta", "part-*")))
-    cent_parts = sorted(glob.glob(os.path.join(root, INDEX_DIR, "centroids", "*.parquet")))
-    if not meta_parts or not cent_parts:
-        return None
-    import pyarrow.parquet as pq
-
-    with open(meta_parts[0]) as f:
-        meta = json.loads(f.read().strip())
-    tbl = pq.read_table(cent_parts[0]).to_pydict()
-    order = np.argsort(tbl["cluster_id"])
-    centroids = np.asarray(tbl["centroid"], dtype=np.float32)[order]
-    return meta, centroids
-
-
-def _load_sidecar_hadoop(spark: SparkSession, path: str):
-    """Sidecar read for ANY Hadoop-compatible URL (hdfs://, s3a://, ...):
-    glob + byte-read through the JVM FileSystem API, parsed with pyarrow on
-    the driver — zero Spark jobs, matching the reference's any-object-store
-    footer probe (src/ivf/parquet.rs:176-208). Raises IndexError_ when the
-    sidecar is missing/unreadable — never a silent brute-force fallback."""
+def _load_sidecar(spark: SparkSession, path: str):
+    """Sidecar read through the Hadoop FileSystem (file:, hdfs://, s3a://,
+    ...): glob + byte-read through the JVM FileSystem API, parsed with
+    pyarrow on the driver — zero Spark jobs, matching the reference's
+    any-object-store footer probe (src/ivf/parquet.rs:176-208). Raises
+    IndexError_ when the sidecar is missing — never a silent brute-force
+    fallback."""
     import io
 
     import pyarrow.parquet as pq
@@ -102,46 +79,30 @@ def _load_sidecar_hadoop(spark: SparkSession, path: str):
     return meta, cents[np.argsort(cluster_ids)]
 
 
-# per-layout sidecar cache: {normalized path: (signature, meta, centroids)}.
-# The signature is the sidecar META file's (path, mtime, size) — every
+# per-layout sidecar cache: {path: (signature, meta, centroids)}.
+# The signature is the sidecar META file's (path, mtime ms, size) — every
 # sidecar write (append refresh, rebuild swap) rewrites meta, so a stale hit
-# requires a same-path same-size rewrite inside one mtime tick. Bounded to a
-# handful of layouts (a session queries few); evicts insertion-oldest.
+# requires a same-path same-size rewrite inside one millisecond. Bounded to
+# a handful of layouts (a session queries few); evicts insertion-oldest.
 _SIDECAR_CACHE: dict = {}
 _SIDECAR_CACHE_MAX = 8
 
 
 def _sidecar_signature(spark: SparkSession, path: str):
-    """Cheap freshness probe for the layout's sidecar: one stat of the meta
-    part-file (local: os.stat; remote: one FileStatus RPC — still far less
-    I/O than re-reading meta + centroid parquet bytes every query). None
-    when the probe can't see a sidecar (caller falls through to the real
-    load, which raises its own precise error)."""
-    import glob
-    import os
+    """Cheap freshness probe for the layout's sidecar: one ``globStatus``
+    of the meta part-file, whose FileStatus already carries mtime and
+    length — far less I/O than re-reading meta + centroid parquet bytes
+    every query. None when no sidecar is visible (the caller falls through
+    to the real load, which raises its own precise error); filesystem
+    errors raise."""
+    from pq_vector_spark.index.build import _hadoop_fs
 
-    root = path[len("file://"):] if path.startswith("file://") else path
-    if "://" not in root:
-        parts = sorted(glob.glob(os.path.join(root, INDEX_DIR, "meta", "part-*")))
-        if not parts:
-            return None
-        try:
-            st = os.stat(parts[0])
-        except OSError:
-            return None
-        return ("local", parts[0], st.st_mtime_ns, st.st_size)
-    try:
-        from pq_vector_spark.index.build import _hadoop_glob
-
-        parts = sorted(_hadoop_glob(spark, f"{path}/{INDEX_DIR}/meta/part-*"))
-        if not parts:
-            return None
-        jvm = spark._jvm
-        jp = jvm.org.apache.hadoop.fs.Path(parts[0])
-        st = jp.getFileSystem(spark._jsc.hadoopConfiguration()).getFileStatus(jp)
-        return ("hadoop", parts[0], int(st.getModificationTime()), int(st.getLen()))
-    except Exception:
+    fs, jpath = _hadoop_fs(spark, f"{path}/{INDEX_DIR}/meta/part-*")
+    statuses = fs.globStatus(jpath)
+    if not statuses:
         return None
+    st = min(statuses, key=lambda s: s.getPath().toString())
+    return (st.getPath().toString(), int(st.getModificationTime()), int(st.getLen()))
 
 
 def load_index(
@@ -149,14 +110,14 @@ def load_index(
 ) -> LoadedIndex:
     """Read the sidecar (≙ footer-KV + payload read, src/ivf/parquet.rs:120-208).
 
-    Local filesystems are read directly on the driver; any other
-    Hadoop-compatible URL reads through the JVM FileSystem API (still
-    driver-side, still zero Spark jobs). Unreadable sidecars raise.
+    The read goes through the Hadoop FileSystem on the driver for every
+    path (file:, hdfs://, s3a://, ...) — zero Spark jobs. Unreadable
+    sidecars raise.
 
     Repeated loads of the same layout hit a per-session cache keyed on the
-    sidecar meta file's (mtime, size) — a warm query pays one stat instead
-    of re-parsing the centroid parquet (r10 measured ~0.4 s/query of fixed
-    cold-path cost at sf0.1). Appends and rebuilds rewrite the meta file,
+    sidecar meta file's (mtime, size) — a warm query pays one globStatus
+    instead of re-parsing the centroid parquet (r10 measured ~0.4 s/query
+    of fixed cold-path cost at sf0.1). Appends and rebuilds rewrite the meta file,
     so they invalidate naturally; ``use_cache=False`` bypasses for callers
     that must see the storage truth — the MUTATING paths use it
     (``append_to_index`` seeds its sidecar rewrite from this read, and the
@@ -171,11 +132,7 @@ def load_index(
         hit = _SIDECAR_CACHE.get(key)
         if hit is not None and hit[0] == sig:
             return LoadedIndex(meta=dict(hit[1]), centroids=hit[2])
-    local = _load_sidecar_local(path)
-    if local is not None:
-        meta, centroids = local
-    else:
-        meta, centroids = _load_sidecar_hadoop(spark, path)
+    meta, centroids = _load_sidecar(spark, path)
     if centroids.shape != (meta["n_clusters"], meta["dim"]):
         raise IndexError_(
             f"sidecar corrupt: centroids {centroids.shape} != meta "

@@ -29,6 +29,7 @@ from __future__ import annotations
 import os
 import threading
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame
 
 # escape hatch: PQ_SPREAD_SMALL_SCANS=0 disables the guard everywhere
@@ -70,12 +71,13 @@ _BYTES_MEMO: dict = {}
 
 
 def _input_bytes(df: DataFrame) -> int:
-    """Total on-disk bytes of ``df``'s input files, or -1 when the plan
-    is not file-backed (or listing/stat fails). Local ``file:`` URIs
-    stat directly; any other scheme goes through the Hadoop FileSystem.
-    Only consulted when the plan is under-partitioned, i.e. when the
-    file count is at most a few core-waves — the per-file stat cost is
-    bounded by construction."""
+    """Total on-disk bytes of ``df``'s input files (one Hadoop FileSystem
+    status per file), or -1 when the plan is not file-backed (or listing/
+    stat fails). Only consulted when the plan is under-partitioned, i.e.
+    when the file count is at most a few core-waves — the per-file stat
+    cost is bounded by construction."""
+    from pq_vector_spark.index.build import _hadoop_fs
+
     spark = df.sparkSession
     sc = spark.sparkContext
     try:
@@ -91,17 +93,9 @@ def _input_bytes(df: DataFrame) -> int:
     total = 0
     try:
         for f in files:
-            if f.startswith("file:"):
-                path = f[len("file:") :]
-                while path.startswith("//"):
-                    path = path[1:]
-                total += os.stat(path).st_size
-            else:
-                jvm = sc._jvm
-                p = jvm.org.apache.hadoop.fs.Path(f)
-                fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
-                total += fs.getFileStatus(p).getLen()
-    except Exception:
+            fs, jpath = _hadoop_fs(spark, f)
+            total += fs.getFileStatus(jpath).getLen()
+    except Py4JJavaError:
         return -1
     _BYTES_MEMO[key] = total
     return total

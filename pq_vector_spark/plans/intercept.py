@@ -37,8 +37,6 @@ from __future__ import annotations
 
 import json
 import logging
-import os
-import re
 import threading
 from typing import Dict, Optional
 
@@ -93,8 +91,8 @@ _CODES_SIDECARS: Dict[str, tuple] = {}
 
 # layouts known to have NO persisted registration (path -> monotonic
 # probe time): without this, every interception attempt against an
-# unregistered layout re-pays the disk probe — os.path.isfile locally
-# (free), but one FileSystem.globStatus RPC PER QUERY against S3/HDFS.
+# unregistered layout re-pays the storage probe — one FileSystem RPC PER
+# QUERY.
 # Invalidated by register/unregister; entries also EXPIRE after
 # _MISS_REPROBE_SEC so a registration persisted by ANOTHER process
 # (discovery-from-storage is a cross-process contract) becomes visible to
@@ -140,8 +138,6 @@ def register_codes_sidecar(
     persistence failure raises AFTER the in-memory registration succeeded
     (the current session keeps the route either way).
     """
-    from pyspark.sql import SparkSession
-
     spark = spark or SparkSession.getActiveSession()
     if spark is None:
         raise ValueError(
@@ -149,8 +145,9 @@ def register_codes_sidecar(
             "(or pass spark=) to measure the codes table's coverage"
         )
     codes_rows = spark.read.parquet(codes_path).count()
-    _CODES_SIDECAR_MISSES.pop(_normalize_path(indexed_path), None)
-    _CODES_SIDECARS[_normalize_path(indexed_path)] = (
+    key = _normalize_path(indexed_path, spark)
+    _CODES_SIDECAR_MISSES.pop(key, None)
+    _CODES_SIDECARS[key] = (
         codes_path,
         codebook,
         id_col,
@@ -166,20 +163,15 @@ def _persist_codes_registration(
     spark, indexed_path: str, codes_path: str, codebook, id_col: str, codes_rows: int
 ) -> None:
     """Write the codes registration into ``<indexed>/_pq_index/``: the
-    codebook as npz bytes plus a ``codes.json`` naming the codes table,
-    id column, and the coverage row count the staleness guard compares.
-    Driver-side, zero Spark jobs — local paths write directly, any other
-    Hadoop-compatible URL goes through the JVM FileSystem (same split as
-    the IVF sidecar writer, index/build.py:_write_sidecar)."""
+    codebook as npz bytes plus a ``codes.json`` naming the codes table
+    (qualified path), id column, and the coverage row count the staleness
+    guard compares. Driver-side through the Hadoop FileSystem, zero Spark
+    jobs (same writer as the IVF sidecar, index/build.py:_write_sidecar)."""
     import io
 
     import numpy as np
 
-    from pq_vector_spark.index.build import (
-        INDEX_DIR,
-        _hadoop_write_bytes,
-        _local_root,
-    )
+    from pq_vector_spark.index.build import INDEX_DIR, _hadoop_write_bytes, _write_text
 
     buf = io.BytesIO()
     # Mirror PQCodebook.save exactly (index/pq.py:80-84): the optional OPQ
@@ -193,31 +185,14 @@ def _persist_codes_registration(
     np.savez(buf, codebooks=codebook.codebooks, dim=np.int64(codebook.dim), **extras)
     reg = {
         "format": "pq_vector_spark/pq-codes-v1",
-        "codes_path": (
-            os.path.abspath(codes_path) if "://" not in codes_path else codes_path
-        ),
+        "codes_path": _normalize_path(codes_path, spark),
         "id_col": id_col,
         "codes_rows": int(codes_rows),
         "codebook_file": CODES_CODEBOOK_FILE,
     }
-    root = _local_root(indexed_path)
-    if root is not None and os.path.isdir(root):
-        d = os.path.join(root, INDEX_DIR)
-        os.makedirs(d, exist_ok=True)
-        with open(os.path.join(d, CODES_CODEBOOK_FILE), "wb") as f:
-            f.write(buf.getvalue())
-        with open(os.path.join(d, CODES_REG_FILE), "w") as f:
-            f.write(json.dumps(reg) + "\n")
-        return
-    base = indexed_path.rstrip("/")
-    _hadoop_write_bytes(
-        spark, f"{base}/{INDEX_DIR}/{CODES_CODEBOOK_FILE}", buf.getvalue()
-    )
-    _hadoop_write_bytes(
-        spark,
-        f"{base}/{INDEX_DIR}/{CODES_REG_FILE}",
-        (json.dumps(reg) + "\n").encode("utf-8"),
-    )
+    base = f"{indexed_path.rstrip('/')}/{INDEX_DIR}"
+    _hadoop_write_bytes(spark, f"{base}/{CODES_CODEBOOK_FILE}", buf.getvalue())
+    _write_text(spark, f"{base}/{CODES_REG_FILE}", json.dumps(reg) + "\n")
 
 
 def _load_codes_registration(spark, indexed_path: str):
@@ -235,35 +210,21 @@ def _load_codes_registration(spark, indexed_path: str):
 
     from pq_vector_spark.index.build import (
         INDEX_DIR,
-        _hadoop_glob,
+        _hadoop_exists,
         _hadoop_read_bytes,
-        _local_root,
+        _read_text,
     )
     from pq_vector_spark.index.pq import PQCodebook
 
     try:
-        root = _local_root(indexed_path)
-        base = indexed_path.rstrip("/")
-        if root is not None:
-            reg_p = os.path.join(root, INDEX_DIR, CODES_REG_FILE)
-            if not os.path.isfile(reg_p):
-                return False, None
-            with open(reg_p) as f:
-                reg = json.loads(f.read().strip())
-            with open(
-                os.path.join(root, INDEX_DIR, reg.get("codebook_file", CODES_CODEBOOK_FILE)),
-                "rb",
-            ) as f:
-                raw = f.read()
-        else:
-            reg_url = f"{base}/{INDEX_DIR}/{CODES_REG_FILE}"
-            if not _hadoop_glob(spark, reg_url):
-                return False, None
-            reg = json.loads(_hadoop_read_bytes(spark, reg_url).decode("utf-8").strip())
-            raw = _hadoop_read_bytes(
-                spark,
-                f"{base}/{INDEX_DIR}/{reg.get('codebook_file', CODES_CODEBOOK_FILE)}",
-            )
+        base = f"{indexed_path.rstrip('/')}/{INDEX_DIR}"
+        reg_url = f"{base}/{CODES_REG_FILE}"
+        if not _hadoop_exists(spark, reg_url):
+            return False, None
+        reg = json.loads(_read_text(spark, reg_url).strip())
+        raw = _hadoop_read_bytes(
+            spark, f"{base}/{reg.get('codebook_file', CODES_CODEBOOK_FILE)}"
+        )
         z = np.load(io.BytesIO(raw))
         codebook = PQCodebook(
             codebooks=z["codebooks"],
@@ -305,14 +266,22 @@ def _lookup_codes_sidecar(spark, indexed_path: str, *, force_probe: bool = False
     in the meantime. Query-path interception keeps the cached miss (losing
     at most ``_MISS_REPROBE_SEC`` of a foreign registration's speedup,
     never data)."""
+    return _cached_codes_sidecar(
+        spark, _normalize_path(indexed_path, spark), force_probe=force_probe
+    )
+
+
+def _cached_codes_sidecar(spark, key: str, *, force_probe: bool = False):
+    """``_lookup_codes_sidecar`` for an already-qualified layout path — the
+    query path passes the path qualified at registration, so a lookup is a
+    dict read."""
     import time as _time
 
-    key = _normalize_path(indexed_path)
     sidecar = _CODES_SIDECARS.get(key)
     if sidecar is None:
         miss_at = None if force_probe else _CODES_SIDECAR_MISSES.get(key)
         if miss_at is None or _time.monotonic() - miss_at >= _MISS_REPROBE_SEC:
-            found, sidecar = _load_codes_registration(spark, indexed_path)
+            found, sidecar = _load_codes_registration(spark, key)
             if sidecar is not None:
                 _CODES_SIDECARS[key] = sidecar
                 _CODES_SIDECAR_MISSES.pop(key, None)
@@ -349,34 +318,22 @@ def unregister_codes_sidecar(indexed_path: str, spark=None) -> None:
     back to the raw IVF probe. Removes BOTH the session cache entry and
     the persisted ``_pq_index/codes.json`` registration — otherwise the
     disk copy would silently resurrect the route on the next interception.
-    Deleting a non-local registration needs a session (pass ``spark=`` or
-    have one active); without one, only the in-memory entry is dropped and
-    a warning is logged — and the negative-lookup cache is NOT seeded
-    (the registration is still on disk, so query-path lookups must stay
-    free to rediscover it; seeding a miss here would hide it for the
+    Deleting the registration needs a session (pass ``spark=`` or have one
+    active); without one, only the in-memory entry of the path as given is
+    dropped and a warning is logged — and the negative-lookup cache is NOT
+    seeded (the registration is still on disk, so query-path lookups must
+    stay free to rediscover it; seeding a miss here would hide it for the
     whole TTL, contradicting this docstring)."""
     import time as _time
 
-    key = _normalize_path(indexed_path)
-    _CODES_SIDECARS.pop(key, None)
-    from pq_vector_spark.index.build import INDEX_DIR, _local_root
-
-    root = _local_root(indexed_path)
-    if root is not None:
-        for fname in (CODES_REG_FILE, CODES_CODEBOOK_FILE):
-            p = os.path.join(root, INDEX_DIR, fname)
-            if os.path.isfile(p):
-                os.remove(p)
-        # deletion confirmed: a miss entry is now TRUE, seed it so the
-        # query path doesn't pay a probe per query for the gone route
-        _CODES_SIDECAR_MISSES[key] = _time.monotonic()
-        return
-    from pyspark.sql import SparkSession
+    from pq_vector_spark.index.build import INDEX_DIR, _hadoop_delete
 
     spark = spark or SparkSession.getActiveSession()
     if spark is None:
         # persisted copy NOT deleted — drop any stale miss entry so the
         # still-on-disk registration stays discoverable
+        key = indexed_path.rstrip("/")
+        _CODES_SIDECARS.pop(key, None)
         _CODES_SIDECAR_MISSES.pop(key, None)
         _LOG.warning(
             "unregister_codes_sidecar(%s): no active SparkSession — the "
@@ -385,14 +342,12 @@ def unregister_codes_sidecar(indexed_path: str, spark=None) -> None:
             indexed_path,
         )
         return
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    base = indexed_path.rstrip("/")
+    key = _normalize_path(indexed_path, spark)
+    _CODES_SIDECARS.pop(key, None)
     for fname in (CODES_REG_FILE, CODES_CODEBOOK_FILE):
-        p = jvm.org.apache.hadoop.fs.Path(f"{base}/{INDEX_DIR}/{fname}")
-        fs = p.getFileSystem(conf)
-        if fs.exists(p):
-            fs.delete(p, False)
+        _hadoop_delete(spark, f"{key}/{INDEX_DIR}/{fname}", recursive=False)
+    # deletion confirmed: a miss entry is now TRUE, seed it so the query
+    # path doesn't pay a probe per query for the gone route
     _CODES_SIDECAR_MISSES[key] = _time.monotonic()
 
 
@@ -682,10 +637,20 @@ def _projected_sort_target(sort_key, below):
     return None, None, None
 
 
-def _normalize_path(p: str) -> str:
-    if p.startswith("file:"):
-        p = re.sub(r"^file:(//)?", "", p)
-    return os.path.abspath(p.rstrip("/"))
+def _normalize_path(p: str, spark=None) -> str:
+    """Fully qualified form of ``p`` (scheme, authority, absolute path), as
+    Spark qualifies a scan's root path: a path without a scheme resolves
+    against ``fs.defaultFS``. Registered layouts are qualified once, so the
+    per-query comparison with the scan root is a string compare. A path
+    that already names its scheme and authority is returned as Hadoop
+    parses it, without instantiating that filesystem's client."""
+    spark = spark or SparkSession.getActiveSession()
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(p)
+    uri = jpath.toUri()
+    if uri.getScheme() is None or uri.getAuthority() is None:
+        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        jpath = fs.makeQualified(jpath)
+    return jpath.toString()
 
 
 def _unqualified_sql(spark, jexpr) -> str:
@@ -729,7 +694,7 @@ def _try_pq_route(
     output-column pre-check rejects queries projecting columns the PQ plan
     drops (e.g. the cluster column) instead of failing post-attach.
     """
-    sidecar = _lookup_codes_sidecar(spark, path)
+    sidecar = _cached_codes_sidecar(spark, path)
     if sidecar is None:
         return None, False
     codes_path, codebook, id_col, codes_rows = sidecar
@@ -948,11 +913,8 @@ def _try_intercept(spark, df, options, observation, indexed_tables):
     rps = rel.location().rootPaths()
     if rps.size() != 1:
         _decline(f"multi-root-scan: {rps.size()} root paths (need exactly 1)")
-    scan_path = _normalize_path(rps.apply(0).toString())
-    path = next(
-        (p for p in indexed_tables.values() if _normalize_path(p) == scan_path),
-        None,
-    )
+    scan_path = rps.apply(0).toString()
+    path = next((p for p in indexed_tables.values() if p == scan_path), None)
     if path is None:
         _decline(f"path-not-indexed: {scan_path} is not a registered indexed table")
     # re-read the layout with the schema the plan already resolved: Parquet

@@ -56,7 +56,7 @@ def _mask_quoted(s: str) -> str:
     return "".join(out)
 
 
-# tables registered as "indexed": name -> filesystem path of the indexed layout
+# tables registered as "indexed": name -> qualified path of the indexed layout
 _INDEXED_TABLES: Dict[str, str] = {}
 
 
@@ -64,7 +64,7 @@ def register_indexed_table(spark: SparkSession, name: str, path: str) -> None:
     """Make ``name`` queryable in SQL *and* eligible for the indexed rewrite
     (≙ the reference wiring its rule into the session, session.rs:24-35)."""
     spark.read.parquet(path).drop("_pq_cluster_id").createOrReplaceTempView(name)
-    _INDEXED_TABLES[name] = path
+    _INDEXED_TABLES[name] = intercept._normalize_path(path, spark)
 
 
 # all-numeric [..] group NOT preceded by identifier/)/] (those are indexing)

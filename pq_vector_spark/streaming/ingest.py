@@ -28,10 +28,10 @@ from __future__ import annotations
 
 import json
 import logging
-import os
 import uuid
 from typing import Optional
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -133,26 +133,16 @@ def dedup_append_batch(
 
 
 def _delete_path(spark, path: str) -> None:
-    """Best-effort recursive delete of a staging dir (local or Hadoop).
+    """Recursive delete of a staging dir through the Hadoop FileSystem.
     A failed delete never fails the batch (its appends already committed)
     but it is LOGGED — a silently-leaked ``.staging-*`` directory per batch
     adds up on a long-running stream; ``_sweep_staging`` reclaims leftovers
     at the next stream start."""
-    from pq_vector_spark.index.build import _local_root
+    from pq_vector_spark.index.build import _hadoop_delete
 
     try:
-        root = _local_root(path)
-        if root is not None:
-            import shutil
-
-            shutil.rmtree(root, ignore_errors=True)
-            return
-        jvm = spark._jvm
-        jp = jvm.org.apache.hadoop.fs.Path(path)
-        fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(jp):
-            fs.delete(jp, True)
-    except Exception:
+        _hadoop_delete(spark, path)
+    except Py4JJavaError:
         _LOG.warning(
             "dedup_append_batch: failed to delete staging dir %s — it will "
             "be swept at the next streaming_ingest start",
@@ -167,27 +157,14 @@ def _sweep_staging(spark, corpus_path: str) -> int:
     Streaming runs batches serially, so no staging dir of THIS query is
     live before the first batch, and a staging dir is only ever read by
     the batch that created it. Returns the number removed."""
-    from pq_vector_spark.index.build import _hadoop_glob, _local_root
+    from pq_vector_spark.index.build import _hadoop_delete, _hadoop_glob
 
-    pattern = f"{corpus_path.rstrip('/')}.staging-*"
     removed = 0
     try:
-        root = _local_root(pattern)
-        if root is not None:
-            import glob as _glob
-            import shutil
-
-            for p in _glob.glob(root):
-                shutil.rmtree(p, ignore_errors=True)
-                removed += 1
-        else:
-            jvm = spark._jvm
-            conf = spark._jsc.hadoopConfiguration()
-            for p in _hadoop_glob(spark, pattern):
-                jp = jvm.org.apache.hadoop.fs.Path(p)
-                jp.getFileSystem(conf).delete(jp, True)
-                removed += 1
-    except Exception:
+        for p in _hadoop_glob(spark, f"{corpus_path.rstrip('/')}.staging-*"):
+            _hadoop_delete(spark, p)
+            removed += 1
+    except Py4JJavaError:
         _LOG.warning(
             "streaming_ingest: staging sweep under %s failed", corpus_path,
             exc_info=True,
@@ -364,19 +341,9 @@ def _pending_dir(indexed_path: str) -> str:
 
 
 def _list_pending(spark, indexed_path: str) -> list:
-    from pq_vector_spark.index.build import _hadoop_glob, _local_root
+    from pq_vector_spark.index.build import _hadoop_glob
 
-    base = _pending_dir(indexed_path)
-    root = _local_root(base)
-    if root is not None:
-        if not os.path.isdir(root):
-            return []
-        return sorted(
-            os.path.join(base, d)
-            for d in os.listdir(root)
-            if d.startswith("batch-")
-        )
-    return sorted(_hadoop_glob(spark, f"{base}/batch-*"))
+    return sorted(_hadoop_glob(spark, f"{_pending_dir(indexed_path)}/batch-*"))
 
 
 def drain_pending_appends(
@@ -649,12 +616,9 @@ def streaming_index_ingest(
         th.start()
 
     def _marker_exists(spark, marker: str) -> bool:
-        from pq_vector_spark.index.build import _hadoop_glob, _local_root
+        from pq_vector_spark.index.build import _hadoop_exists
 
-        root = _local_root(marker)
-        if root is not None:
-            return os.path.isfile(root)
-        return bool(_hadoop_glob(spark, marker))
+        return _hadoop_exists(spark, marker)
 
     def _write_marker(spark, marker: str, body: str) -> None:
         from pq_vector_spark.index.build import _write_text
@@ -676,7 +640,7 @@ def streaming_index_ingest(
         weight (only the in-flight batch can replay); keep the current and
         previous batch, delete the rest — bounds both the file count and
         the per-batch existence probe's directory size."""
-        from pq_vector_spark.index.build import _hadoop_glob, _local_root
+        from pq_vector_spark.index.build import _hadoop_delete, _hadoop_glob
 
         def batch_of(name: str):
             try:
@@ -684,28 +648,18 @@ def streaming_index_ingest(
             except (IndexError, ValueError):
                 return None
 
-        root = _local_root(marker_base)
-        if root is not None:
-            if not os.path.isdir(root):
-                return
-            for name in os.listdir(root):
-                b = batch_of(name)
-                if b is not None and b < batch_id - 1:
-                    try:
-                        os.remove(os.path.join(root, name))
-                    except OSError:
-                        pass
-            return
         try:
-            jvm = spark._jvm
-            conf = spark._jsc.hadoopConfiguration()
             for p in _hadoop_glob(spark, f"{marker_base}/batch-*"):
                 b = batch_of(p)
                 if b is not None and b < batch_id - 1:
-                    jp = jvm.org.apache.hadoop.fs.Path(p)
-                    jp.getFileSystem(conf).delete(jp, False)
-        except Exception:
-            pass  # pruning is best-effort housekeeping
+                    _hadoop_delete(spark, p, recursive=False)
+        except Py4JJavaError:
+            # pruning is housekeeping: the next batch retries it
+            _LOG.warning(
+                "streaming_index_ingest: pruning markers under %s failed",
+                marker_base,
+                exc_info=True,
+            )
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession

@@ -187,19 +187,62 @@ def test_adhoc_ivf_exact_envelope(spark, golden_vectors):
 
 
 def test_has_index_file_url_and_hadoop_fs(spark, indexed_table):
-    """The probe works on URL-form paths, and the Hadoop FileSystem branch
-    reads the very same sidecar (exercised against LocalFS via file://)."""
+    """The probe works on URL-form paths, and the Hadoop FileSystem reader
+    returns the very same sidecar for the URL as for the plain path."""
     from pq_vector_spark.index.build import _hadoop_glob
-    from pq_vector_spark.index.search import _load_sidecar_hadoop
+    from pq_vector_spark.index.search import _load_sidecar
 
     url = "file://" + indexed_table["out"]
     assert has_index(url, spark=spark)
-    # force the Hadoop-API branch directly: glob + byte-read through the JVM
+    # the sidecar reader directly: glob + byte-read through the JVM
     assert _hadoop_glob(spark, f"{url}/_pq_index/meta/part-*")
-    meta, cents = _load_sidecar_hadoop(spark, url)
+    meta, cents = _load_sidecar(spark, url)
     idx = load_index(spark, indexed_table["out"])
     assert meta == idx.meta
     assert np.array_equal(cents, idx.centroids)
+
+
+def test_default_filesystem_paths_take_the_index(spark, tmp_path):
+    """A path without a scheme resolves against ``fs.defaultFS``, as
+    ``spark.read`` resolves it. With a viewfs default filesystem mounting
+    ``/data`` onto a local directory, the probe, ``topk`` and SQL
+    interception all find the index built at ``/data/layout`` instead of
+    silently running brute force."""
+    from pq_vector_spark import PqSession, last_decline_reason, vector_route
+    from pq_vector_spark.operators.topk import topk
+    from pq_vector_spark.plans.sql import _INDEXED_TABLES, register_indexed_table
+
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    mount = "fs.viewfs.mounttable.pq.link./data"
+    prev_default = conf.get("fs.defaultFS")
+    rng = np.random.default_rng(11)
+    rows = [(int(i), [float(x) for x in rng.random(4, dtype=np.float32)]) for i in range(300)]
+    q = [0.5] * 4
+    opts = VectorTopKOptions(nprobe=8)
+    conf.set(mount, "file://" + str(tmp_path))
+    conf.set("fs.defaultFS", "viewfs://pq/")
+    try:
+        spark.createDataFrame(rows, "id INT, vec ARRAY<FLOAT>").write.parquet("/data/src")
+        build_index(
+            spark, "/data/src", "/data/layout",
+            column="vec", options=IndexBuildOptions(n_clusters=8),
+        )
+        assert has_index("/data/layout")
+        got = topk("/data/layout", "vec", q, 5, spark=spark, options=opts, tie_break="id")
+        assert vector_route(got) == "ivf"
+
+        register_indexed_table(spark, "vfs_vectors", "/data/layout")
+        out = PqSession(spark, opts).sql(
+            f"SELECT id FROM vfs_vectors ORDER BY array_distance(vec, {q}), id LIMIT 5"
+        )
+        assert vector_route(out) == "ivf"
+        assert last_decline_reason() is None
+        assert [r["id"] for r in out.collect()] == [r["id"] for r in got.collect()]
+    finally:
+        _INDEXED_TABLES.pop("vfs_vectors", None)
+        spark.catalog.dropTempView("vfs_vectors")
+        conf.set("fs.defaultFS", prev_default)
+        conf.unset(mount)
 
 
 def test_has_index_unreachable_fs_raises(spark):
@@ -368,31 +411,34 @@ def test_capped_query_fills_cap_exactly(spark, indexed_table):
 # ---------------- Hadoop-complete build path (round-3) ----------------
 
 
-def test_hadoop_build_path_keeps_file_stats(spark, tmp_path, monkeypatch):
-    """Force the Hadoop-FS branch on a file:// URL: the sidecar and the
-    full file_stats (+ per-cluster counts) must round-trip identically to
-    the local branch, with zero Spark jobs for the sidecar/footer I/O."""
-    import pq_vector_spark.index.build as B
-
+def test_hadoop_build_path_keeps_file_stats(spark, tmp_path):
+    """A build addressed by a file:// URL: the sidecar and the full
+    file_stats (+ per-cluster counts) must round-trip identically when read
+    back by URL and by plain path, and the sidecar is exactly its two files
+    (no checksum companions)."""
     rng = np.random.default_rng(77)
     src = str(tmp_path / "hsrc.parquet")
     out = str(tmp_path / "hout")
     rows = [(int(i), [float(x) for x in rng.random(8, dtype=np.float32)]) for i in range(500)]
     spark.createDataFrame(rows, "id INT, vec ARRAY<FLOAT>").repartition(2).write.parquet(src)
 
-    monkeypatch.setattr(B, "_FORCE_HADOOP", True)
     meta = build_index(
         spark, "file://" + src, "file://" + out,
         column="vec", options=IndexBuildOptions(n_clusters=8),
     )
     assert "file_stats" in meta and all("counts" in f for f in meta["file_stats"])
-    # sidecar readable through BOTH readers
-    monkeypatch.setattr(B, "_FORCE_HADOOP", False)
+    sidecar_files = sorted(
+        os.path.relpath(os.path.join(d, f), os.path.join(out, "_pq_index"))
+        for d, _, fs in os.walk(os.path.join(out, "_pq_index"))
+        for f in fs
+    )
+    assert sidecar_files == ["centroids/part-00000.parquet", "meta/part-00000"]
+    # sidecar readable by plain path and by URL
     idx = load_index(spark, out)
     assert idx.meta["file_stats"] == meta["file_stats"]
-    from pq_vector_spark.index.search import _load_sidecar_hadoop
+    from pq_vector_spark.index.search import _load_sidecar
 
-    hmeta, hcents = _load_sidecar_hadoop(spark, "file://" + out)
+    hmeta, hcents = _load_sidecar(spark, "file://" + out)
     assert hmeta == idx.meta and hcents.shape == (8, 8)
 
     # capped round-trip on the hadoop-built layout
@@ -408,7 +454,7 @@ def test_hadoop_build_path_keeps_file_stats(spark, tmp_path, monkeypatch):
     assert obs.get["candidate_rows"] == 32
 
 
-def test_hadoop_sidecar_and_footer_io_run_zero_jobs(spark, tmp_path, monkeypatch):
+def test_hadoop_sidecar_and_footer_io_run_zero_jobs(spark, tmp_path):
     """The driver-side Hadoop FS sidecar write + footer stats read must not
     launch Spark jobs (the reference's object-store footer I/O is likewise
     job-free, src/ivf/parquet.rs:176-208)."""
@@ -420,7 +466,6 @@ def test_hadoop_sidecar_and_footer_io_run_zero_jobs(spark, tmp_path, monkeypatch
     spark.createDataFrame(
         [(i, i % 4) for i in range(100)], f"id INT, {CLUSTER_COL} INT"
     ).coalesce(1).write.parquet(d)
-    monkeypatch.setattr(B, "_FORCE_HADOOP", True)
 
     tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup(None) or [])
@@ -840,16 +885,16 @@ def test_load_index_sidecar_cache_hits_and_invalidates(spark, tmp_path):
     )
     i1 = S.load_index(spark, out)
     # warm hit: the raw sidecar readers must NOT run again
-    real = S._load_sidecar_local
+    real = S._load_sidecar
 
-    def boom(p):
+    def boom(spark_, p):
         raise AssertionError("sidecar bytes re-read on a warm load")
 
-    S._load_sidecar_local = boom
+    S._load_sidecar = boom
     try:
         i2 = S.load_index(spark, out)
     finally:
-        S._load_sidecar_local = real
+        S._load_sidecar = real
     assert i2.meta == i1.meta
     assert i2.centroids is i1.centroids  # shared matrix, no re-parse
     # per-call meta copies: caller mutation is invisible to later loads
