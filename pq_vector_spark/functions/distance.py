@@ -16,8 +16,11 @@ Reference parity notes:
 - f64 query literals are narrowed to the f32 grid by the reference
   (src/df_vector/expr.rs:48-50); we keep stored vectors float32 and cast up
   to double at compute time, which is lossless for float32 inputs.
-- null / dim-mismatched rows at query time yield NULL distance → dropped by
-  orderBy-limit, matching the silent skip in src/df_vector/exec.rs:495-528.
+- null / dim-mismatched rows at query time yield NULL distance (the
+  reference skips them silently, src/df_vector/exec.rs:495-528). The top-k
+  operators sort with ``asc_nulls_last`` so those rows rank after every
+  real neighbour; SQL text passed to ``PqSession.sql`` keeps Spark's own
+  ``ORDER BY`` null order (``ASC`` ⇒ NULLS FIRST unless it says otherwise).
 """
 
 from __future__ import annotations
@@ -55,100 +58,101 @@ def _as_vector_col(v: VectorLike) -> Column:
 # compilation actually succeeds.
 UNROLL_LIMIT = 128
 
-# literal queries wider than UNROLL_LIMIT use an Arrow-batched numpy kernel:
-# one pandas UDF accumulating PER DIMENSION, left-to-right, in float64 —
-# the same summation order as the HOF fold and the DuckDB oracle, so results
-# stay bit-identical while running vectorized (measured ~3× faster than the
-# interpreted HOF fold at dim 256 on 1M rows). This is the sanctioned
-# Python-in-the-hot-path case: built-ins genuinely cannot express a
-# codegen-able wide-vector kernel.
+# literal queries wider than UNROLL_LIMIT use an Arrow-batched numpy kernel
+# (``_fold`` below), ~3× faster than the interpreted HOF fold at dim 256 on
+# 1M rows. This is the sanctioned Python-in-the-hot-path case: built-ins
+# genuinely cannot express a codegen-able wide-vector kernel.
+
+
+def _valid_rows(values, width: int, dtype):
+    """``(ok, mat)`` for one Arrow batch of array values: ``ok`` marks the
+    rows that are non-NULL with exactly ``width`` elements, ``mat`` stacks
+    those rows as an ``(ok.sum(), width)`` matrix of ``dtype``. Invalid rows
+    are the reference's silently skipped ones (src/df_vector/exec.rs:
+    495-528); every kernel scores them NULL."""
+    arrs = np.asarray(values, dtype=object)
+    lens = np.fromiter(
+        (len(a) if a is not None else -1 for a in arrs), dtype=np.int64, count=len(arrs)
+    )
+    ok = lens == width
+    if not ok.any():
+        return ok, np.empty((0, width), dtype=dtype)
+    return ok, np.stack(arrs[ok]).astype(dtype)
+
+
+def _fold(mode: str, a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """The ``sq_l2`` / ``dot`` / ``cosine`` score over the last axis of two
+    float64 operands that broadcast against each other: ``(m,d)`` with a
+    literal ``(d,)``, ``(m,d)`` with ``(m,d)``, or ``(m,1,d)`` with a query
+    matrix ``(1,n_q,d)``.
+
+    Precision contract of every Arrow kernel: the loop accumulates PER
+    DIMENSION, left to right, in float64 from a 0.0 start — the summation
+    order of the ``zip_with``/``aggregate`` fold, the unrolled chain and
+    the DuckDB ``list_reduce`` oracle — so each score is bit-identical to
+    theirs while each step stays vectorized across rows. Cosine folds both
+    norms in the same loop and divides once, ``dot / (√‖a‖² · √‖b‖²)``; a
+    zero norm gives NaN, as the native path does."""
+    acc = np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]))
+    if mode == "cosine":
+        na, nb = np.zeros(a.shape[:-1]), np.zeros(b.shape[:-1])
+    for j in range(a.shape[-1]):
+        x, y = a[..., j], b[..., j]
+        if mode == "sq_l2":
+            d = x - y
+            acc += d * d
+        else:
+            acc += x * y
+            if mode == "cosine":
+                na += x * x
+                nb += y * y
+    if mode == "cosine":
+        return acc / (np.sqrt(na) * np.sqrt(nb))
+    return acc
+
+
+def _scored(ok: np.ndarray, scores: np.ndarray) -> pd.Series:
+    """The output rule of every scalar Arrow kernel: ``scores`` fill the
+    ``ok`` rows and only the invalid rows become NULL. A NaN score (cosine
+    of a zero-norm vector) stays NaN, as in the native fold, where Spark
+    ranks it above every double; an explicit mask keeps Arrow from turning
+    it into NULL (``pd.array`` would coerce every NaN to NA)."""
+    out = np.full(len(ok), np.nan)
+    out[ok] = scores
+    return pd.Series(pd.arrays.FloatingArray(out, mask=~ok))
 
 
 def _arrow_fold_kernel(q, mode: str):
     from pyspark.sql.types import DoubleType
 
     qd = np.asarray([float(x) for x in q], dtype=np.float64)
-    dim = qd.shape[0]
-    if mode == "cosine":
-        # ‖q‖ with the same sequential fold the oracle applies to the literal
-        nq = 0.0
-        for x in qd:
-            nq += x * x
-        nq = float(np.sqrt(nq))
 
     @F.pandas_udf(DoubleType())
     def _k(v: pd.Series) -> pd.Series:
-        arrs = v.to_numpy()
-        lens = np.fromiter((len(a) if a is not None else -1 for a in arrs), dtype=np.int64)
-        ok = lens == dim
-        out = np.full(len(arrs), np.nan)
-        if ok.any():
-            mat = np.stack(arrs[ok]).astype(np.float64)
-            acc = np.zeros(mat.shape[0])
-            if mode == "sq_l2":
-                for j in range(dim):
-                    d = mat[:, j] - qd[j]
-                    acc += d * d
-            elif mode == "dot":
-                for j in range(dim):
-                    acc += mat[:, j] * qd[j]
-            elif mode == "cosine":
-                na = np.zeros(mat.shape[0])
-                for j in range(dim):
-                    acc += mat[:, j] * qd[j]
-                    na += mat[:, j] * mat[:, j]
-                acc = acc / (np.sqrt(na) * nq)
-            out[ok] = acc
-        # dim mismatch / null input ⇒ NULL; legitimate NaN scores (e.g.
-        # cosine of a zero-norm vector) must STAY NaN — the native fold
-        # yields NaN there and Spark ranks NaN above every double while
-        # NULLs are filtered/sorted last. An explicit mask marks only the
-        # bad rows as NA (pd.array would coerce every NaN to NA).
-        res = pd.arrays.FloatingArray(out, mask=np.asarray(~ok))
-        return pd.Series(res)
+        ok, mat = _valid_rows(v, qd.shape[0], np.float64)
+        return _scored(ok, _fold(mode, mat, qd))
 
     return _k
 
 
 def _arrow_fold_kernel2(mode: str):
-    """Two-COLUMN variant of the wide-vector kernel (no literal side):
-    same per-dimension left-to-right float64 accumulation ⇒ bit-identical
-    to the zip_with/aggregate fold. Used when a dim hint says the vectors
-    are too wide for codegen (col-col dims aren't knowable at plan time)."""
+    """Two-COLUMN variant of the wide-vector kernel (no literal side), used
+    when a dim hint says the vectors are too wide for codegen (col-col dims
+    aren't knowable at plan time). Precision: see ``_fold``."""
     from pyspark.sql.types import DoubleType
 
     @F.pandas_udf(DoubleType())
     def _k(va: pd.Series, vb: pd.Series) -> pd.Series:
         aa, bb = va.to_numpy(), vb.to_numpy()
-        la = np.fromiter((len(x) if x is not None else -1 for x in aa), dtype=np.int64)
-        lb = np.fromiter((len(x) if x is not None else -2 for x in bb), dtype=np.int64)
-        ok = (la == lb) & (la >= 0)
-        out = np.full(len(aa), np.nan)
-        for d in np.unique(la[ok]):
-            sel = ok & (la == d)
-            ma = np.stack(aa[sel]).astype(np.float64)
-            mb = np.stack(bb[sel]).astype(np.float64)
-            acc = np.zeros(ma.shape[0])
-            if mode == "sq_l2":
-                for j in range(d):
-                    x = ma[:, j] - mb[:, j]
-                    acc += x * x
-            elif mode == "dot":
-                for j in range(d):
-                    acc += ma[:, j] * mb[:, j]
-            elif mode == "cosine":
-                na = np.zeros(ma.shape[0])
-                nb = np.zeros(ma.shape[0])
-                for j in range(d):
-                    acc += ma[:, j] * mb[:, j]
-                    na += ma[:, j] * ma[:, j]
-                    nb += mb[:, j] * mb[:, j]
-                acc = acc / (np.sqrt(na) * np.sqrt(nb))
-            out[sel] = acc
-        # mask only dim-mismatch/null rows as NA; NaN scores stay NaN
-        # (bit-parity with the zip_with fold — see _arrow_fold_kernel)
-        res = pd.arrays.FloatingArray(out, mask=np.asarray(~ok))
-        return pd.Series(res)
+        ok = np.zeros(len(aa), dtype=bool)
+        scores = np.full(len(aa), np.nan)
+        for d in {len(x) for x in aa if x is not None}:
+            oka, ma = _valid_rows(aa, d, np.float64)
+            okb, mb = _valid_rows(bb, d, np.float64)
+            sel = oka & okb
+            scores[sel] = _fold(mode, ma[okb[oka]], mb[oka[okb]])
+            ok |= sel
+        return _scored(ok, scores[ok])
 
     return _k
 
@@ -156,46 +160,21 @@ def _arrow_fold_kernel2(mode: str):
 def _arrow_multi_kernel(qmat, mode: str):
     """N-query batch kernel: ONE pass over the vector column computes the
     distance to every row of the (n_q × d) literal query matrix, returning
-    an array<double> of n_q scores per row. Per-dimension left-to-right
-    float64 accumulation keeps each score bit-identical to the scalar fold.
+    an array<double> of n_q scores per row (precision: see ``_fold``).
     This is the scale shape for batch KNN: the corpus crosses the Arrow
     boundary once, not once per query (a cross join transfers it n_q×)."""
     from pyspark.sql.types import ArrayType, DoubleType
 
     Q = np.asarray(qmat, dtype=np.float64)
-    n_q, dim = Q.shape
-    if mode == "cosine":
-        nrm = np.zeros(n_q)
-        for j in range(dim):  # same sequential fold as the oracle
-            nrm += Q[:, j] * Q[:, j]
-        nrm = np.sqrt(nrm)
 
     @F.pandas_udf(ArrayType(DoubleType()))
     def _k(v: pd.Series) -> pd.Series:
-        arrs = v.to_numpy()
-        lens = np.fromiter((len(a) if a is not None else -1 for a in arrs), dtype=np.int64)
-        ok = lens == dim
-        out = np.empty(len(arrs), dtype=object)
-        if ok.any():
-            mat = np.stack(arrs[ok]).astype(np.float64)  # (m, d)
-            acc = np.zeros((mat.shape[0], n_q))
-            if mode == "sq_l2":
-                for j in range(dim):
-                    d = mat[:, j : j + 1] - Q[:, j][None, :]
-                    acc += d * d
-            elif mode == "dot":
-                for j in range(dim):
-                    acc += mat[:, j : j + 1] * Q[:, j][None, :]
-            elif mode == "cosine":
-                na = np.zeros(mat.shape[0])
-                for j in range(dim):
-                    acc += mat[:, j : j + 1] * Q[:, j][None, :]
-                    na += mat[:, j] * mat[:, j]
-                acc = acc / (np.sqrt(na)[:, None] * nrm[None, :])
-            rows = np.nonzero(ok)[0]
-            for r, i in enumerate(rows):
-                out[i] = acc[r].tolist()
+        ok, mat = _valid_rows(v, Q.shape[1], np.float64)
+        acc = _fold(mode, mat[:, None, :], Q[None, :, :])  # (m, n_q)
         # dim mismatch / null input ⇒ NULL array, same as the scalar kernels
+        out = np.empty(len(ok), dtype=object)
+        for i, row in zip(np.nonzero(ok)[0], acc):
+            out[i] = row.tolist()
         return pd.Series(out)
 
     return _k

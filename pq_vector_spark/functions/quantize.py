@@ -25,6 +25,14 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pq_vector_spark.functions.distance import (
+    UNROLL_LIMIT,
+    _fold,
+    _scored,
+    _valid_rows,
+    array_distance,
+)
+
 CODES_COL = "q_codes"
 MIN_COL = "q_mn"
 SCALE_COL = "q_scale"
@@ -85,9 +93,8 @@ def quantized_distance(
 
     Narrow vectors dequantize inline inside one ``zip_with`` fold; wide
     vectors (> UNROLL_LIMIT dims, where Catalyst HOFs run interpreted)
-    switch to an Arrow kernel with the SAME per-dimension left-to-right
-    float64 accumulation as the fold — bit-identical results (the exact
-    technique ``functions/distance.py`` uses for its wide kernels).
+    switch to an Arrow kernel, bit-identical to the fold (see
+    ``functions/distance._fold``).
 
     The wide kernel reads the quantized columns as STORED data (the normal
     shape — quantization exists to be written once and scanned many
@@ -97,7 +104,6 @@ def quantized_distance(
     (ExpressionProxy INTERNAL_ERROR) — persist the quantized table first,
     or stay at ≤ UNROLL_LIMIT dims where the pure-HOF fold handles both
     shapes."""
-    from pq_vector_spark.functions.distance import UNROLL_LIMIT
 
     if len(query) > UNROLL_LIMIT:
         return _arrow_quantized_kernel(query)(
@@ -118,33 +124,21 @@ def quantized_distance(
 
 
 def _arrow_quantized_kernel(query: Sequence[float]):
-    """Pandas-UDF dequantized-distance kernel: per-dimension left-to-right
-    float64 accumulation (vectorized across rows) ⇒ the identical addition
-    sequence as the zip_with/aggregate fold and the DuckDB oracle."""
+    """Pandas-UDF dequantized-distance kernel: dequantize the batch, then
+    ``distance._fold`` it against the query (precision: see ``_fold``).
+    Rows with a NULL ``mn`` or ``scale`` score NULL, as in the fold."""
     from pyspark.sql.types import DoubleType
 
     qd = np.asarray([float(x) for x in query], dtype=np.float64)
-    dim = qd.shape[0]
 
     @F.pandas_udf(DoubleType())
     def _k(codes: pd.Series, mn: pd.Series, sc: pd.Series) -> pd.Series:
-        arrs = codes.to_numpy()
-        lens = np.fromiter(
-            (len(a) if a is not None else -1 for a in arrs), dtype=np.int64
-        )
-        ok = (lens == dim) & ~mn.isna().to_numpy() & ~sc.isna().to_numpy()
-        out = np.full(len(arrs), np.nan)
-        if ok.any():
-            mat = np.stack(arrs[ok]).astype(np.float64)
-            mnv = mn.to_numpy(dtype=np.float64, na_value=np.nan)[ok]
-            scv = sc.to_numpy(dtype=np.float64, na_value=np.nan)[ok]
-            acc = np.zeros(mat.shape[0])
-            for j in range(dim):
-                d = (mnv + (mat[:, j] + 128.0) * scv) - qd[j]
-                acc += d * d
-            out[ok] = np.sqrt(acc)
-        res = pd.arrays.FloatingArray(out, mask=np.asarray(~ok))
-        return pd.Series(res)
+        ok, mat = _valid_rows(codes, qd.shape[0], np.float64)
+        mnv = mn.to_numpy(dtype=np.float64, na_value=np.nan)[ok, None]
+        scv = sc.to_numpy(dtype=np.float64, na_value=np.nan)[ok, None]
+        dist = np.sqrt(_fold("sq_l2", mnv + (mat + 128.0) * scv, qd))
+        live = ok & mn.notna().to_numpy() & sc.notna().to_numpy()
+        return _scored(live, dist[live[ok]])
 
     return _k
 
@@ -245,7 +239,6 @@ def binary_topk(
     no I/O savings). ``oversample`` trades recall for re-rank cost —
     recall is measured per-config in the bench's ``scale.bq`` entries,
     the SQ8/PQ discipline."""
-    from pq_vector_spark.functions.distance import array_distance
     from pq_vector_spark.operators.topk import DISTANCE_COL
 
     if k < 1:
@@ -299,7 +292,6 @@ def binary_topk_with_fetch(
     single-table convenience form; THIS is the at-scale layout. Sign-bit
     Hamming is an angular proxy — recall vs oversample is measured
     per-config in the bench (1M×256 mixture: 1.0 at oversample 16)."""
-    from pq_vector_spark.functions.distance import array_distance
     from pq_vector_spark.operators.topk import DISTANCE_COL
 
     if k < 1:

@@ -19,6 +19,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pq_vector_spark.functions.distance import _valid_rows, array_distance
+
 
 def l2_normalize(col) -> Column:
     """Unit-L2-normalized copy of an array<float/double> column (double
@@ -126,7 +128,6 @@ def embedding_outliers(
     """
     from pyspark.sql import Window
 
-    from pq_vector_spark.functions.distance import array_distance
 
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
@@ -298,19 +299,10 @@ def _project_pandas(column: str, rows, width: int):
 
     @F.pandas_udf("array<double>")
     def _mm(v: pd.Series) -> pd.Series:
-        arrs = v.to_numpy()
-        lens = np.fromiter(
-            (len(a) if a is not None else -1 for a in arrs), dtype=np.int64
-        )
-        ok = lens == width
-        out = np.empty(len(arrs), dtype=object)
-        out[~ok] = None
-        if ok.any():
-            mat = np.stack(arrs[ok]).astype(np.float64)  # (n, source)
-            proj = mat @ mt  # (n, target)
-            idx = np.nonzero(ok)[0]
-            for i, row in zip(idx, proj):
-                out[i] = row
+        ok, mat = _valid_rows(v, width, np.float64)  # (n, source)
+        out = np.empty(len(ok), dtype=object)
+        for i, row in zip(np.nonzero(ok)[0], mat @ mt):  # (n, target)
+            out[i] = row
         return pd.Series(out)
 
     return _mm(F.col(column).cast("array<double>"))

@@ -40,6 +40,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, ShortType
 
+from pq_vector_spark.functions.distance import _scored, _valid_rows, array_distance
 from pq_vector_spark.index.kmeans import train_kmeans
 
 CODES_COL = "pq_codes"
@@ -246,28 +247,20 @@ def encode_pq(
     def _encode(v: pd.Series) -> pd.Series:
         cb = bc.value  # (m, k, dsub)
         rot = bc_rot.value  # (dim, dim) or None
-        arrs = v.to_numpy()
-        lens = np.fromiter(
-            (len(a) if a is not None else -1 for a in arrs), dtype=np.int64
-        )
-        ok = lens == dim
-        out = np.empty(len(arrs), dtype=object)
-        out[~ok] = None
-        if ok.any():
-            mat = np.stack(arrs[ok]).astype(np.float32)  # (n, dim)
-            if rot is not None:
-                mat = mat @ rot  # OPQ: rotate before the subspace split
-            codes = np.empty((mat.shape[0], mm), dtype=np.int16)
-            for j in range(mm):
-                sub = mat[:, j * dsub : (j + 1) * dsub]
-                cents = cb[j]  # (k, dsub)
-                c2 = (cents.astype(np.float64) ** 2).sum(axis=1).astype(np.float32)
-                d2 = -2.0 * (sub @ cents.T)
-                d2 += c2[None, :]
-                codes[:, j] = d2.argmin(axis=1).astype(np.int16)
-            idx = np.nonzero(ok)[0]
-            for i, row in zip(idx, codes):
-                out[i] = row
+        ok, mat = _valid_rows(v, dim, np.float32)  # (n, dim)
+        if rot is not None:
+            mat = mat @ rot  # OPQ: rotate before the subspace split
+        codes = np.empty((mat.shape[0], mm), dtype=np.int16)
+        for j in range(mm):
+            sub = mat[:, j * dsub : (j + 1) * dsub]
+            cents = cb[j]  # (k, dsub)
+            c2 = (cents.astype(np.float64) ** 2).sum(axis=1).astype(np.float32)
+            d2 = -2.0 * (sub @ cents.T)
+            d2 += c2[None, :]
+            codes[:, j] = d2.argmin(axis=1).astype(np.int16)
+        out = np.empty(len(ok), dtype=object)
+        for i, row in zip(np.nonzero(ok)[0], codes):
+            out[i] = row
         return pd.Series(out)
 
     return df.withColumn(codes_col, _encode(F.col(column).cast("array<float>")))
@@ -287,17 +280,8 @@ def adc_distance(
 
     @F.pandas_udf(DoubleType())
     def _adc(codes: pd.Series) -> pd.Series:
-        arrs = codes.to_numpy()
-        lens = np.fromiter(
-            (len(a) if a is not None else -1 for a in arrs), dtype=np.int64
-        )
-        ok = lens == mm
-        out = np.full(len(arrs), np.nan)
-        if ok.any():
-            mat = np.stack(arrs[ok]).astype(np.int64)  # (n, m)
-            out[ok] = np.sqrt(lut[np.arange(mm)[None, :], mat].sum(axis=1))
-        res = pd.arrays.FloatingArray(out, mask=np.asarray(~ok))
-        return pd.Series(res)
+        ok, mat = _valid_rows(codes, mm, np.int64)  # (n, m)
+        return _scored(ok, np.sqrt(lut[np.arange(mm)[None, :], mat].sum(axis=1)))
 
     return _adc(F.col(codes_col))
 
@@ -326,7 +310,6 @@ def pq_topk(
     the m-byte codes for stage one. Both stages stay in the bounded-heap
     plan shape of the exact path (src/ivf/search.rs:112-127's max-heap,
     distributed)."""
-    from pq_vector_spark.functions.distance import array_distance
     from pq_vector_spark.operators.topk import DISTANCE_COL
 
     derived_codes = codes_col is None
@@ -376,7 +359,6 @@ def pq_topk_with_fetch(
     exactly. This is the split the reference cannot express (it stores only
     raw f32, src/ivf/parquet.rs); at 100 TB the codes table is the only
     full scan."""
-    from pq_vector_spark.functions.distance import array_distance
     from pq_vector_spark.operators.topk import DISTANCE_COL
 
     c = max(k * rerank, k)
@@ -496,7 +478,6 @@ def ivfpq_topk(
     covering the candidate set this equals brute force (the oracle row);
     production recall at nprobe < n_clusters is measured in bench.
     """
-    from pq_vector_spark.functions.distance import array_distance
     from pq_vector_spark.index.build import CLUSTER_COL
     from pq_vector_spark.index.kmeans import nearest_centroids
     from pq_vector_spark.index.search import load_index

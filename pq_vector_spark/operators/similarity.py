@@ -18,6 +18,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from pq_vector_spark.functions.distance import (
+    _fold,
+    _scored,
+    _valid_rows,
     array_distance,
     cosine_similarity,
     multi_distances,
@@ -78,7 +81,7 @@ def similarity_join(
     pairs = c.crossJoin(broadcast(q))
     if metric == "l2":
         score = array_distance(F.col("_cv"), F.col("_qv"), dim_hint=dim_hint)
-        order = [F.col("score").asc(), F.col("_cid").asc()]
+        order = [F.col("score").asc_nulls_last(), F.col("_cid").asc()]
     elif metric == "cosine":
         score = cosine_similarity(F.col("_cv"), F.col("_qv"), dim_hint=dim_hint)
         order = [F.col("score").desc(), F.col("_cid").asc()]
@@ -222,9 +225,9 @@ def ivf_multi_query_topk(
     scan is pruned to the probed-cluster union (pushed ``IN`` filter on the
     sorted layout — unprobed clusters are never read); one ``mapInPandas``
     pass scores each corpus batch against ONLY the queries that probed its
-    cluster, with the same per-dimension left-to-right float64 accumulation
-    as every other kernel (bit-identical to the scalar fold, so
-    nprobe = n_clusters reproduces ``multi_query_topk`` exactly).
+    cluster with ``functions/distance._fold`` (bit-identical to the scalar
+    fold, so nprobe = n_clusters reproduces ``multi_query_topk`` exactly,
+    NaN cosine scores of zero-norm rows included).
 
     Scale shape: candidate work is Σ_q Σ_{c∈probe(q)} |c| pairs — the same
     pruning as ``ivf_similarity_join`` — but the corpus crosses the Arrow
@@ -272,54 +275,30 @@ def ivf_multi_query_topk(
     pruned = corpus.select(id_col, vec_col, CLUSTER_COL)
 
     asc = metric == "l2"
+    mode = "sq_l2" if asc else "cosine"
     out_schema = f"_qidx INT, _cid {id_type}, score DOUBLE"
-
-    if metric == "cosine":
-        qnorm = np.zeros(Q.shape[0])
-        for j in range(dim):  # same sequential fold as the oracle
-            qnorm += Q[:, j] * Q[:, j]
-        qnorm = np.sqrt(qnorm)
 
     def _score(batches):
         for pdf in batches:
-            arrs = pdf[vec_col].to_numpy()
-            lens = np.fromiter(
-                (len(a) if a is not None else -1 for a in arrs), dtype=np.int64
-            )
-            ok = lens == dim
-            if not ok.any():
-                continue
-            sub = pdf.loc[ok]
-            clusters = sub[CLUSTER_COL].to_numpy()
-            ids = sub[id_col].to_numpy()
-            mat_all = np.stack(sub[vec_col].to_numpy()).astype(np.float64)
+            ok, mat_all = _valid_rows(pdf[vec_col], dim, np.float64)
+            clusters = pdf[CLUSTER_COL].to_numpy()[ok]
+            ids = pdf[id_col].to_numpy()[ok]
             parts = []
             for c in np.unique(clusters):
                 qidxs = cluster_to_q.get(int(c))
                 if not qidxs:
                     continue
                 rows = clusters == c
-                mat = mat_all[rows]
-                Qc = Q[qidxs]
-                acc = np.zeros((mat.shape[0], len(qidxs)))
-                if metric == "l2":
-                    for j in range(dim):
-                        d = mat[:, j : j + 1] - Qc[:, j][None, :]
-                        acc += d * d
+                acc = _fold(mode, mat_all[rows][:, None, :], Q[qidxs][None, :, :])
+                if asc:
                     acc = np.sqrt(acc)
-                else:
-                    na = np.zeros(mat.shape[0])
-                    for j in range(dim):
-                        acc += mat[:, j : j + 1] * Qc[:, j][None, :]
-                        na += mat[:, j] * mat[:, j]
-                    acc = acc / (np.sqrt(na)[:, None] * qnorm[qidxs][None, :])
                 n_r, n_q = acc.shape
                 parts.append(
                     pd.DataFrame(
                         {
                             "_qidx": np.tile(np.asarray(qidxs, dtype=np.int32), n_r),
                             "_cid": np.repeat(ids[rows], n_q),
-                            "score": acc.ravel(),
+                            "score": _scored(np.ones(acc.size, dtype=bool), acc.ravel()),
                         }
                     )
                 )
@@ -418,7 +397,7 @@ def ivf_similarity_join(
             F.col(idx.meta["column"]), F.col("_pq_qv"), dim_hint=idx.meta["dim"]
         ),
     )
-    order = [F.col("score").asc()]
+    order = [F.col("score").asc_nulls_last()]
     if corpus_id is not None:
         order.append(F.col(corpus_id).asc())  # deterministic tie-break
     w = Window.partitionBy("_pq_qid").orderBy(*order)

@@ -4,6 +4,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from pq_vector_spark.functions.distance import UNROLL_LIMIT
 from pq_vector_spark.index.build import build_index
 from pq_vector_spark.operators.similarity import (
     cosine_topk,
@@ -39,6 +40,26 @@ def test_similarity_join_l2(spark, corpus):
     for qid, r in best.items():
         assert r["cid"] == qid
         assert r["score"] == pytest.approx(0.0)
+
+
+@pytest.mark.parametrize("dim", [2, UNROLL_LIMIT + 8])
+def test_similarity_join_ranks_null_and_mismatch_last(spark, dim):
+    """Corpus rows with a NULL or wrong-length vector score NULL; they must
+    rank after every real neighbour, on the native fold and on the wide
+    column-pair kernel (``dim_hint``) alike."""
+    rows = [
+        (0, [1.0] * dim),
+        (1, [2.0] * dim),
+        (2, None),
+        (3, [0.5] * (dim - 1)),
+        (4, [4.0] * dim),
+    ]
+    corpus = spark.createDataFrame(rows, "cid INT, vec ARRAY<DOUBLE>")
+    queries = spark.createDataFrame([(9, [0.0] * dim)], "qid INT, qv ARRAY<DOUBLE>")
+    out = similarity_join(
+        queries, corpus, "qid", "cid", "qv", "vec", 2, dim_hint=dim
+    ).collect()
+    assert sorted((r["cid"], r["rank"]) for r in out) == [(0, 1), (1, 2)]
 
 
 def test_similarity_join_broadcasts(spark, corpus):
@@ -209,11 +230,19 @@ def test_multi_query_topk_cosine(spark, corpus):
     assert sims == sorted(sims, reverse=True)
 
 
-def test_multi_query_topk_wide_routes_to_arrow_and_matches(spark):
+@pytest.mark.parametrize("metric", ["l2", "dot", "cosine"])
+def test_multi_query_topk_wide_routes_to_arrow_and_matches(spark, metric):
     """Above the codegen budget the scorer must switch to the Arrow matrix
-    kernel — and stay bit-identical to the scalar kernels."""
-    from pq_vector_spark.functions.distance import UNROLL_LIMIT, array_distance
+    kernel — and stay bit-identical to the scalar kernel of each metric."""
+    from pq_vector_spark.functions.distance import (
+        UNROLL_LIMIT,
+        array_distance,
+        cosine_similarity,
+        dot_product,
+    )
     from pq_vector_spark.operators.similarity import multi_query_topk
+
+    scalar_fn = {"l2": array_distance, "dot": dot_product, "cosine": cosine_similarity}
 
     dim = UNROLL_LIMIT + 32
     rng = np.random.default_rng(11)
@@ -221,7 +250,7 @@ def test_multi_query_topk_wide_routes_to_arrow_and_matches(spark):
     wide = spark.createDataFrame(rows, "cid BIGINT, vec ARRAY<FLOAT>")
     queries = [(i, rows[i][1]) for i in range(3)]
 
-    out = multi_query_topk(wide, "vec", queries, 5, id_col="cid")
+    out = multi_query_topk(wide, "vec", queries, 5, id_col="cid", metric=metric)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" in plan or "PythonUDF" in plan
 
@@ -231,9 +260,10 @@ def test_multi_query_topk_wide_routes_to_arrow_and_matches(spark):
         mine = sorted(
             (r for r in got if r["qid"] == qid), key=lambda r: r["rank"]
         )
+        d = F.col("d").asc() if metric == "l2" else F.col("d").desc()
         scalar = (
-            wide.select("cid", array_distance(F.col("vec"), qv).alias("d"))
-            .orderBy(F.col("d").asc(), F.col("cid").asc())
+            wide.select("cid", scalar_fn[metric](F.col("vec"), qv).alias("d"))
+            .orderBy(d, F.col("cid").asc())
             .limit(5)
             .collect()
         )
@@ -296,7 +326,11 @@ def test_ivf_multi_query_topk_prunes_scan(spark, corpus, indexed_corpus):
     assert min(got, key=lambda r: r["rank"])["cid"] == 0  # self-match survives
 
 
-def test_ivf_multi_query_topk_cosine(spark, corpus, indexed_corpus):
+def _assert_ivf_cosine_matches_brute(spark, corpus, indexed_path, n_clusters):
+    """ivf_multi_query_topk at nprobe = n_clusters returns exactly the
+    (qid, cid, score) rows of multi_query_topk, a NaN score equal to NaN."""
+    import math
+
     from pq_vector_spark.operators.similarity import (
         ivf_multi_query_topk,
         multi_query_topk,
@@ -305,13 +339,40 @@ def test_ivf_multi_query_topk_cosine(spark, corpus, indexed_corpus):
     qrows = corpus.filter(F.col("cid") < 3).select("cid", "vec").collect()
     queries = [(r["cid"], r["vec"]) for r in qrows]
     got = ivf_multi_query_topk(
-        spark, indexed_corpus, queries, 4, id_col="cid", nprobe=8, metric="cosine"
+        spark, indexed_path, queries, 4, id_col="cid", nprobe=n_clusters, metric="cosine"
     ).collect()
     want = multi_query_topk(corpus, "vec", queries, 4, id_col="cid", metric="cosine").collect()
-    key = lambda r: (r["qid"], r["rank"])
-    assert [(r["qid"], r["cid"], r["score"]) for r in sorted(got, key=key)] == [
-        (r["qid"], r["cid"], r["score"]) for r in sorted(want, key=key)
-    ]
+
+    def rows(out):
+        nan = lambda x: x is not None and math.isnan(x)
+        return [
+            (r["qid"], r["cid"], "NaN" if nan(r["score"]) else r["score"])
+            for r in sorted(out, key=lambda r: (r["qid"], r["rank"]))
+        ]
+
+    assert rows(got) == rows(want)
+    return rows(got)
+
+
+def test_ivf_multi_query_topk_cosine(spark, corpus, indexed_corpus, tmp_path_factory):
+    _assert_ivf_cosine_matches_brute(spark, corpus, indexed_corpus, 8)
+
+    # one zero-norm corpus row: its cosine is NaN, which Spark ranks above
+    # every double — the IVF batch must keep it (never NULL) on the
+    # unrolled-width and the wide corpus alike
+    rng = np.random.default_rng(7)
+    for dim in (6, UNROLL_LIMIT + 8):
+        rows = [(int(i), [float(x) for x in rng.random(dim, dtype=np.float32)]) for i in range(120)]
+        rows[50] = (50, [0.0] * dim)
+        zc = spark.createDataFrame(rows, "cid BIGINT, vec ARRAY<FLOAT>")
+        base = tmp_path_factory.mktemp(f"zero_norm_{dim}")
+        src, out_path = str(base / "corpus.parquet"), str(base / "indexed")
+        zc.write.mode("overwrite").parquet(src)
+        build_index(spark, src, out_path, column="vec", options=IndexBuildOptions(n_clusters=4))
+        got = _assert_ivf_cosine_matches_brute(spark, zc, out_path, 4)
+        assert {(qid, cid) for qid, cid, score in got if score == "NaN"} == {
+            (q, 50) for q in range(3)
+        }
 
 
 def test_ivf_multi_query_topk_dim_mismatch_raises(spark, indexed_corpus):

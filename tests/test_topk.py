@@ -1,8 +1,10 @@
 """Golden end-to-end top-k tests — same data and expected ids as the
 reference's SQL tests (src/df_vector/tests.rs:16-104, 152-241)."""
 
+import pytest
 from pyspark.sql import functions as F
 
+from pq_vector_spark.functions.distance import UNROLL_LIMIT
 from pq_vector_spark.operators.topk import brute_force_topk
 
 
@@ -39,3 +41,22 @@ def test_plan_is_take_ordered(golden_vectors):
     out = brute_force_topk(golden_vectors, "vec", [0.0, 0.0], 2)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
+
+
+@pytest.mark.parametrize("dim", [2, UNROLL_LIMIT + 8])
+def test_null_and_mismatched_vectors_rank_last(spark, dim):
+    """A NULL or wrong-length vector has a NULL distance; it must rank
+    after every real neighbour (Spark's plain ``asc`` puts NULLs first),
+    on the unrolled route and on the wide Arrow-kernel route alike."""
+    rows = [
+        (0, None),
+        (1, [1.0] * (dim - 1)),
+        (2, [3.0] * dim),
+        (3, [1.0] * dim),
+        (4, [2.0] * dim),
+    ]
+    df = spark.createDataFrame(rows, "id INT, vec ARRAY<FLOAT>")
+    out = brute_force_topk(df, "vec", [0.0] * dim, 3, tie_break="id")
+    assert _ids(out) == [3, 4, 2]
+    # with k beyond the valid rows, the NULL-distance rows come last
+    assert _ids(brute_force_topk(df, "vec", [0.0] * dim, 5, tie_break="id")) == [3, 4, 2, 0, 1]
